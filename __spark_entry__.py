@@ -1633,7 +1633,9 @@ def _q_pq_codes(spark, sf_dir):
     subvectors, each replaced by its nearest (squared-L2) codeword id
     from the deterministic seed codebook (subvectors of the k=8
     smallest-id vectors; ties to the smallest code). Codes are the
-    integer argmins (same ulp-tie caveat as cluster_assign); mse is the
+    integer argmins (same ulp-tie caveat as cluster_assign), emitted as
+    one '-'-joined string in subspace order (the gate hashes scalar
+    columns, not arrays); mse is the
     mean squared reconstruction error, rounded 6 (bm25 discipline —
     Spark folds per-sub distances in sub order, DuckDB sums the same 8
     doubles; both land well inside 1e-6)."""
@@ -1645,7 +1647,11 @@ def _q_pq_codes(spark, sf_dir):
     emb = _embeddings(spark, sf_dir).filter(F.col("embedding").isNotNull())
     cb = pq_seed_codebooks(emb, m=8, k=8)
     out = pq_encode(emb, cb, m=8)
-    return out.select("vec_id", "codes", F.round("mse", 6).alias("mse"))
+    return out.select(
+        "vec_id",
+        F.concat_ws("-", F.col("codes").cast("array<string>")).alias("codes"),
+        F.round("mse", 6).alias("mse"),
+    )
 
 
 def _q_cross_jaccard(spark, sf_dir):
@@ -3230,7 +3236,7 @@ s{k} AS MATERIALIZED (SELECT id, landmark, dist FROM s{k - 1}
          UNION ALL SELECT id, landmark, {k}::BIGINT AS dist FROM f{k})""")
     if harmonic == "closeness":
         parts.append(f"""
-SELECT landmark, count(*) AS n_reached, sum(dist) AS sum_dist,
+SELECT landmark, count(*) AS n_reached, sum(dist)::BIGINT AS sum_dist,
        count(*)::DOUBLE / sum(dist) AS closeness
 FROM s{rounds} WHERE dist > 0 GROUP BY landmark""")
     elif harmonic:
@@ -3322,7 +3328,7 @@ wc AS MATERIALIZED (
   SELECT doc_id, term, count(*) AS c FROM toks WHERE term <> ''
   GROUP BY doc_id, term),
 ws AS MATERIALIZED (
-  SELECT doc_id, sum(c) AS n_words, count(*) AS n_distinct_words,
+  SELECT doc_id, sum(c)::BIGINT AS n_words, count(*) AS n_distinct_words,
          max(c) AS top_word_c
   FROM wc GROUP BY doc_id),
 warr AS MATERIALIZED (
@@ -3833,7 +3839,7 @@ WITH cnt AS MATERIALIZED (
   SELECT user_id, event_type, count(*) AS c FROM events
   WHERE user_id IS NOT NULL GROUP BY user_id, event_type),
 agg AS (
-  SELECT user_id, sum(c) AS t, count(*) AS nd,
+  SELECT user_id, sum(c)::BIGINT AS t, count(*) AS nd,
          list_reduce(
            list_prepend(0.0::DOUBLE, list_sort(list(c::DOUBLE))),
            (acc, x) -> acc + x * ln(x)) AS sc
@@ -3870,7 +3876,7 @@ vocab AS MATERIALIZED (
   SELECT term FROM tstats ORDER BY total_tf DESC, term ASC LIMIT 64),
 per AS MATERIALIZED (
   SELECT t.id, count(*) AS n_tokens,
-         sum(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END) AS n_oov
+         sum(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov
   FROM toks2 t LEFT JOIN vocab v ON v.term = t.term GROUP BY t.id)
 SELECT d.doc_id AS id,
        coalesce(p.n_tokens, 0) AS n_tokens,
@@ -3883,13 +3889,13 @@ FROM documents d LEFT JOIN per p ON p.id = d.doc_id
 WITH agg AS MATERIALIZED (
   SELECT count(*) AS n,
          sum(CASE WHEN coalesce(n_chars > 0, FALSE)
-                  THEN 0 ELSE 1 END) AS v0,
+                  THEN 0 ELSE 1 END)::BIGINT AS v0,
          sum(CASE WHEN coalesce(n_chars = length(text), FALSE)
-                  THEN 0 ELSE 1 END) AS v1,
+                  THEN 0 ELSE 1 END)::BIGINT AS v1,
          sum(CASE WHEN coalesce(length(lang) = 2, FALSE)
-                  THEN 0 ELSE 1 END) AS v2,
+                  THEN 0 ELSE 1 END)::BIGINT AS v2,
          sum(CASE WHEN coalesce(length(text) > 0, FALSE)
-                  THEN 0 ELSE 1 END) AS v3,
+                  THEN 0 ELSE 1 END)::BIGINT AS v3,
          count(*) - count(DISTINCT doc_id) AS v4
   FROM documents)
 SELECT 'n_chars_positive' AS rule, n AS n_rows, v0 AS n_violations,
@@ -4030,7 +4036,7 @@ WITH parsed AS (
 SELECT event_type,
        count(*) AS n,
        count(*) FILTER (k IS NULL) AS k_nulls,
-       sum(k) AS k_sum,
+       sum(k)::BIGINT AS k_sum,
        min(k) AS k_min,
        max(k) AS k_max
 FROM parsed GROUP BY event_type
@@ -4164,14 +4170,14 @@ best AS (
 def _pq_codes_sql(m: int, k: int) -> str:
     """Mirror of _q_pq_codes: seed codebook = per-subspace slices of the
     k smallest-vec_id embeddings (code = id rank), argmin squared-L2 per
-    (vector, subspace) with row_number ties (d2, code), codes list-agg'd
-    in sub order, mse = Σ best d2 / dim rounded 6.  FLOAT[]→DOUBLE[]
+    (vector, subspace) with row_number ties (d2, code), codes joined
+    with '-' in sub order, mse = Σ best d2 / dim rounded 6.  FLOAT[]→DOUBLE[]
     cast is exact, matching pq_encode's per-element double cast."""
     return (
         _pq_prelude(m, k)
         + """
 SELECT vec_id,
-       list(code ORDER BY sub) AS codes,
+       string_agg(code::VARCHAR, '-' ORDER BY sub) AS codes,
        round(sum(d2) / any_value(dim), 6) AS mse
 FROM best GROUP BY vec_id
 """
@@ -4323,13 +4329,13 @@ WITH toks AS MATERIALIZED (
 cnt AS MATERIALIZED (
   SELECT doc_id, w, count(*) AS c FROM toks GROUP BY doc_id, w),
 agg AS (
-  SELECT doc_id, sum(c) AS t, count(*) AS nd,
+  SELECT doc_id, sum(c)::BIGINT AS t, count(*) AS nd,
          list_reduce(
            list_prepend(0.0::DOUBLE, list_sort(list(c::DOUBLE))),
            (acc, x) -> acc + x * ln(x)) AS sc
   FROM cnt GROUP BY doc_id)
 SELECT d.doc_id,
-       coalesce(a.t, 0) AS n_tokens,
+       coalesce(a.t, 0)::BIGINT AS n_tokens,
        coalesce(a.nd, 0) AS n_distinct,
        round(CASE WHEN a.t > 0 THEN ln(a.t::DOUBLE) - a.sc / a.t::DOUBLE
                   ELSE 0.0 END, 6) AS entropy,

@@ -16,7 +16,7 @@ aggregation picks the winner, and the merge is applied as an
 Python). The chosen pair is a 1-row driver action per round — it *is*
 the model parameter, the same role as PageRank's convergence scalar.
 Lineage is truncated with ``localCheckpoint`` on the vocab-sized table
-so the plan stays flat across rounds (the pagerank.py interval-k
+so the plan stays flat across rounds (the plans/iterate.py interval-k
 lesson).
 
 Reference parity note: the reference engine has no tokenizer; this is

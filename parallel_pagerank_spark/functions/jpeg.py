@@ -285,6 +285,9 @@ def decode_jpeg(content: bytes) -> np.ndarray:
             i += 1
             continue
         marker = content[i + 1]
+        if marker == 0xFF:  # fill byte before a marker (T.81 B.1.1.2)
+            i += 1
+            continue
         if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
             i += 2
             continue
@@ -1218,6 +1221,9 @@ def jpeg_dimensions(content: bytes) -> tuple[int, int]:
             i += 1
             continue
         marker = content[i + 1]
+        if marker == 0xFF:  # fill byte before a marker (T.81 B.1.1.2)
+            i += 1
+            continue
         if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
             i += 2
             continue

@@ -198,19 +198,15 @@ def mp4_video_sample_table(data: bytes) -> list[tuple[int, int]]:
         if stbl is None:
             continue
         stsz_box = _find(data, *stbl, b"stsz")
-        stsc_rows = _parse_table(data, *_find(data, *stbl, b"stsc"), ">III")
+        stsc = _find(data, *stbl, b"stsc")
         stco = _find(data, *stbl, b"stco")
-        if stco is not None:
-            chunk_offsets = [
-                r[0] for r in _parse_table(data, *stco, ">I")
-            ]
-        else:
-            chunk_offsets = [
-                r[0]
-                for r in _parse_table(
-                    data, *_find(data, *stbl, b"co64"), ">Q"
-                )
-            ]
+        chunks = stco or _find(data, *stbl, b"co64")
+        if stsc is None or chunks is None or stsz_box is None:
+            raise ValueError("mp4: stbl missing stsc/stco/stsz")
+        stsc_rows = _parse_table(data, *stsc, ">III")
+        chunk_offsets = [
+            r[0] for r in _parse_table(data, *chunks, ">I" if stco else ">Q")
+        ]
         fixed = _u(data, stsz_box[0] + 4, 4)
         n_samples = _u(data, stsz_box[0] + 8, 4)
         if fixed:
@@ -311,6 +307,12 @@ def encode_mp4_mjpeg(
     if not jpeg_samples:
         raise ValueError("encode_mp4_mjpeg: no samples")
     timescale = 600
+    # one sample lasts timescale // fps ticks: exact and non-zero only for
+    # the divisors of the timescale
+    if not (1 <= fps <= timescale and timescale % fps == 0):
+        raise ValueError(
+            f"encode_mp4_mjpeg: fps={fps} must divide {timescale}"
+        )
     delta = timescale // fps
     n = len(jpeg_samples)
     duration = n * delta

@@ -11,8 +11,9 @@ exact).
 
 Superstep shape: one edge⋈frontier join shuffled on dst with a map-side
 partial min; the FRONTIER is eagerly localCheckpoint-ed per round — the
-same lineage-truncation discipline as CC/LPA
-(operators/components.py:261). Truncating the frontier is what keeps
+frontier-state truncation of ``large_star_small_star`` in
+operators/components.py (keyed state goes through plans/iterate.py
+instead). Truncating the frontier is what keeps
 the plan bounded: the anti-join's reference to the previous settled set
 is baked into the flat frontier RDD, so the live ``settled`` chain is a
 plain union of flat frames — LINEAR in rounds (bounded by max_hops) and

@@ -25,7 +25,7 @@ codegen — ``array_min(array_except(sequence(0, |S|), S))`` over the
 collect_set of colored-neighbor colors (|S|+1 candidates always
 contain a free color; |S| <= degree, so the array stays
 degree-bounded); two joins retire the frontier. Eager localCheckpoint
-per round truncates lineage (the operators/pagerank.py:26-31
+per round truncates lineage (the plans/iterate.py
 plan-doubling hazard — uncolored and colored are each referenced
 twice per round).
 """

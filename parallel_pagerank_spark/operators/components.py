@@ -7,8 +7,10 @@ vertex id in the component, convergence when zero labels change.
 Per superstep: every vertex takes the min of its own label and its
 neighbors' labels — a join (edges ⋈ labels on src) + groupBy(dst).min, then
 an outer merge with the previous labels. ONE action per superstep (fused
-changed-count + not-yet-converged check). Lineage truncated per superstep;
-durable parquet checkpoints via the same manifest machinery as PageRank.
+changed-count + not-yet-converged check). The loop is the keyed-state
+superstep driver in plans/iterate.py, shared with PageRank and LPA:
+lineage truncation every ``checkpoint_interval`` supersteps, durable
+parquet checkpoints and resume.
 
 Scaling note: plain min-label propagation needs O(diameter) supersteps —
 fine for social/web graphs (diameter ~20), slow on path graphs. For
@@ -161,34 +163,14 @@ def connected_components(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sym.count()
-    ckpt = SuperstepCheckpointer(checkpoint_dir, "components")
     state = SuperstepState(
-        num_parts, "id", checkpointer=ckpt,
+        num_parts,
+        "id",
+        checkpointer=SuperstepCheckpointer(checkpoint_dir, "components"),
         truncate_interval=checkpoint_interval,
     )
 
-    metrics: list[dict] = []
-    steps = 0
-    converged = False
-    labels = None
-    if resume:
-        snap = ckpt.load_latest(spark)
-        if snap is not None:
-            labels, steps, metrics, was_converged = snap
-            if was_converged:
-                sym.unpersist()
-                return ComponentsResult(
-                    labels.select("id", F.col("label").alias("component")),
-                    steps,
-                    True,
-                    metrics,
-                )
-            labels = state.init(labels.select("id", "label"))
-    if labels is None:
-        labels = state.init(
-            vertices.select("id", F.col("id").alias("label"))
-        )
-    while steps < max_iter:
+    def step(labels: DataFrame):
         # neighbor minimum: push each vertex's label along every edge,
         # take min at the destination. Both join sides are pre-partitioned
         # on the join key → zero-shuffle join; shuffle_hash avoids sorts.
@@ -214,23 +196,15 @@ def connected_components(
                 ).alias("label"),
             )
         )
-        new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-        changed = (
-            new_labels.agg(
-                F.sum(
-                    (F.col("label") != F.col("old_label")).cast("long")
-                ).alias("changed")
-            ).first()["changed"]
-            or 0
-        )
-        steps += 1
-        metrics.append({"superstep": steps, "changed": int(changed)})
-        converged = changed == 0
-        labels = state.advance(
-            new_labels.select("id", "label"), steps, metrics, converged
-        )
-        if converged:
-            break
+        return new_labels, [_changed_count()]
+
+    labels, steps, converged, metrics = state.run(
+        lambda: vertices.select("id", F.col("id").alias("label")),
+        step,
+        _observe_changed,
+        max_iter,
+        resume=resume,
+    )
     sym.unpersist()
     return ComponentsResult(
         labels.select("id", F.col("label").alias("component")),
@@ -238,6 +212,19 @@ def connected_components(
         converged,
         metrics,
     )
+
+
+def _changed_count():
+    """Fused-action column: labels that moved this superstep."""
+    return F.sum((F.col("label") != F.col("old_label")).cast("long")).alias(
+        "changed"
+    )
+
+
+def _observe_changed(step: int, row) -> tuple[dict, bool]:
+    """Metrics record + stop rule of the label loops: stable labels."""
+    changed = int(row["changed"] or 0)
+    return {"superstep": step, "changed": changed}, changed == 0
 
 
 def large_star_small_star(

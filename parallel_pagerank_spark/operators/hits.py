@@ -16,7 +16,7 @@ localCheckpoint-ed. The checkpoint is NOT optional: _l1_normalized
 references its input twice (data + total), so an un-truncated logical
 plan DOUBLES per half-step and driver-side Catalyst analysis goes
 exponential by iteration ~10 (the same hazard documented at
-operators/pagerank.py:26-31); truncation pins the per-round plan depth
+plans/iterate.py); truncation pins the per-round plan depth
 constant. Two scheduling barriers per round: a one-barrier variant
 (lazy persisted auth fused into the hub job) was interleaved-A/B
 benched at sf0.1 in r4 and planned WORSE under AQE (10.3 s vs 7.7 s

@@ -9,13 +9,13 @@ uses 20) makes the trajectory engine-portable and oracle-comparable
 without an eigenvalue estimate.
 
 Scale design — same skeleton as PageRank's distributed loop
-(operators/pagerank.py:312-390): the edge set is shuffled ONCE on src
+(the keyed-state superstep driver in plans/iterate.py): the edge set is shuffled ONCE on src
 and persisted; every superstep is one co-partitioned gather join +
 a hash aggregation on dst + a left join back to the dense vertex set,
 then an eager localCheckpoint. The checkpoint is NOT optional: the
 left-join-back references the previous iterate twice (contrib + carry),
 so an un-truncated logical plan DOUBLES per round (the hazard documented
-at operators/pagerank.py:26-31). Unlike PageRank there is no dangling
+at plans/iterate.py). Unlike PageRank there is no dangling
 redistribution and no normalization, so a superstep has exactly ONE
 shuffle (the dst aggregation) — the minimum any gather-scatter can do.
 """

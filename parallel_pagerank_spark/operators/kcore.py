@@ -11,7 +11,7 @@ references ``cur`` three times per round (directly plus twice through
 ``keep``), so an un-truncated logical plan grows ~3^rounds and the
 analyzer's self-join attribute deduplication pins the driver CPU long
 before the job itself is expensive (the plan-doubling hazard documented
-at operators/pagerank.py:26-31).
+at plans/iterate.py).
 
 Returns the surviving vertices with their degree inside the core.
 Vertices outside the core are absent (an empty result means the k-core is

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.iterate import SuperstepState
-from .components import _route_fast
+from .components import _changed_count, _observe_changed, _route_fast
 from .graph import symmetrize, vertices_from_edges
 
 
@@ -119,15 +119,7 @@ def label_propagation(
     )
     sym.count()
 
-    state = SuperstepState(num_parts, "id")
-    labels = state.init(
-        vertices.select("id", F.col("id").alias("label"))
-    )
-
-    metrics: list[dict] = []
-    steps = 0
-    converged = False
-    while steps < max_iter:
+    def step(labels: DataFrame):
         freq = (
             sym.join(
                 labels.hint("shuffle_hash"), sym.src == labels.id, "inner"
@@ -156,22 +148,13 @@ def label_propagation(
                 ),
             )
         )
-        new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-        changed = (
-            new_labels.agg(
-                F.sum(
-                    (F.col("label") != F.col("old_label")).cast("long")
-                ).alias("c")
-            ).first()["c"]
-            or 0
-        )
-        steps += 1
-        metrics.append({"superstep": steps, "changed": int(changed)})
-        converged = changed == 0
-        labels = state.advance(
-            new_labels.select("id", "label"), steps, metrics, converged
-        )
-        if converged:
-            break
+        return new_labels, [_changed_count()]
+
+    labels, steps, converged, metrics = SuperstepState(num_parts, "id").run(
+        lambda: vertices.select("id", F.col("id").alias("label")),
+        step,
+        _observe_changed,
+        max_iter,
+    )
     sym.unpersist()
     return LabelPropagationResult(labels, steps, converged, metrics)

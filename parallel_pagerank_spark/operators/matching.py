@@ -24,7 +24,7 @@ their two endpoints, one min-struct hash aggregation per endpoint
 (map-side partial), one join back, and two anti-joins retiring matched
 endpoints — everything keyed on vertex ids, nothing quadratic; eager
 localCheckpoint per round truncates lineage (the
-operators/pagerank.py:26-31 plan-doubling hazard — the active set is
+plans/iterate.py plan-doubling hazard — the active set is
 referenced three times per round).
 """
 

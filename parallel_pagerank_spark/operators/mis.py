@@ -24,7 +24,7 @@ ties between equal buckets cannot elect two adjacent vertices.
 Superstep shape: one edge ⋈ priorities join shuffled on the edge key +
 a per-vertex min aggregation (map-side partial), then two anti-joins
 retiring winners and their neighbors; eager localCheckpoint per round
-truncates lineage (the operators/pagerank.py:26-31 plan-doubling
+truncates lineage (the plans/iterate.py plan-doubling
 hazard — the active set is referenced twice per round).
 """
 

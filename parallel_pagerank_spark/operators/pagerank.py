@@ -17,26 +17,17 @@ Physical layout (SURVEY.md §4.3):
   sum (pagerank_mpi.c:166-174) never needs a join.
 - ONE Spark action per superstep: a fused aggregate computing L1, max-error
   (pagerank_mpi.c:201-213) AND the next iteration's dangling sum.
-- ranks stay hash-partitioned on id across supersteps (persist retains the
-  partitioning, unlike localCheckpoint which degrades the DataFrame to a
-  bare RDD scan and forces a re-Exchange per join): the SpMV join is then
-  zero-shuffle (edges hash(src,P) x ranks hash(id,P)) and an iteration
-  pays exactly two exchanges — the contribution aggregation and the
-  aggregated contribs into the update join.
-- lineage/plan growth is truncated every ``checkpoint_interval`` supersteps
-  by a parquet round-trip; with a configured checkpoint_dir those parquet
-  snapshots double as the durable resume points (JSON manifest with
-  per-partition lineage + metrics, north rule). The interval is a real
-  knob: ranks feed BOTH the gather join and the update join, so the
-  un-truncated logical plan DOUBLES per superstep — driver-side Catalyst
-  analysis is O(2^interval) between truncations (measured: interval 7 ≈
-  6× the per-superstep driver cost of interval 5 on a tiny graph where
-  analysis dominates). Keep it small; 5 is the default.
+- the loop itself is the keyed-state superstep driver
+  (``SuperstepState.run`` in plans/iterate.py): ranks stay persisted and
+  hash-partitioned on id, so the SpMV join is zero-shuffle, and lineage is
+  truncated every ``checkpoint_interval`` supersteps by a parquet
+  round-trip that doubles as the durable resume point when a
+  checkpoint_dir is configured. Why the interval must stay small is
+  documented there.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
@@ -44,6 +35,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..config import PageRankConfig
 from ..plans.checkpoint import SuperstepCheckpointer
+from ..plans.iterate import SuperstepState
 from .graph import out_degrees, vertices_from_edges
 
 
@@ -237,23 +229,14 @@ def pagerank(
         )
         hubs.count()
 
-    ckpt = SuperstepCheckpointer(cfg.checkpoint_dir, "pagerank")
+    state = SuperstepState(
+        num_parts,
+        "id",
+        checkpointer=SuperstepCheckpointer(cfg.checkpoint_dir, "pagerank"),
+        truncate_interval=cfg.checkpoint_interval,
+    )
 
-    start_iter = 0
-    metrics: list[dict] = []
-    ranks = None
-    if resume:
-        state = ckpt.load_latest(spark)
-        if state is not None:
-            ranks, start_iter, metrics, was_converged = state
-            if was_converged:
-                edges_w.unpersist()
-                return PageRankResult(
-                    ranks.select("id", "rank"), start_iter, True, metrics
-                )
-            ranks = ranks.repartition(num_parts, "id")
-
-    if ranks is None:
+    def init() -> DataFrame:
         # init p = 1/N (pagerank_mpi.c:44-54); dangling flag = no out-edges
         # (pagerank_mpi.c:169) — iteration-invariant, carried on the rank row.
         deg = out_degrees(edges)
@@ -283,39 +266,26 @@ def pagerank(
         else:
             init_col = F.col("tele").alias("rank")  # init p = v (uniform:
             # 1/N, pagerank_mpi.c:44-54)
-        ranks = (
-            base.join(deg, on="id", how="left")
-            .select(
-                "id",
-                init_col,
-                F.col("tele"),
-                F.col("out_deg").isNull().alias("dangling"),
-            )
-            .repartition(num_parts, "id")
+        return base.join(deg, on="id", how="left").select(
+            "id",
+            init_col,
+            F.col("out_deg").isNull().alias("dangling"),
+            F.col("tele"),
         )
-    ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # initial dangling sum: every dangling vertex holds exactly 1/N
-    srow = ranks.agg(
-        F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("s")
-    ).first()
-    dangling_sum = srow["s"] or 0.0
+    # the dangling mass S of the current ranks: measured on the starting
+    # state, then carried by every superstep's fused action
+    dangling_sum = None
 
-    # lineage-truncation scratch dir: reuse the durable checkpoint dir when
-    # configured, else a session-temp dir (plan depth must stay bounded —
-    # Catalyst has no fixpoint operator, SURVEY.md §4.3)
-    import shutil
-    import tempfile
-
-    scratch = None
-    prev_scratch_path = None
-    if not ckpt.enabled:
-        scratch = tempfile.mkdtemp(prefix="ppr_truncate_")
-
-    converged = False
-    it = start_iter
-    while it < cfg.max_iter:
-        t0 = time.monotonic()
+    def step(ranks: DataFrame):
+        nonlocal dangling_sum
+        if dangling_sum is None:
+            dangling_sum = (
+                ranks.agg(
+                    F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("s")
+                ).first()["s"]
+                or 0.0
+            )
         # SpMV gather (pagerank_mpi.c:176-192): join pulls rank[src] to each
         # edge; hash-agg on dst scatter-sums the contributions with map-side
         # partial aggregation. Both sides are pre-partitioned on their join
@@ -387,53 +357,27 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        new_ranks = new_ranks.persist(StorageLevel.MEMORY_AND_DISK)
         # ONE action: fused convergence metrics (pagerank_mpi.c:201-213,
-        # D3+D4) + next iteration's dangling sum; materializes new_ranks.
-        row = new_ranks.agg(
-            F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1"),
-            F.max(F.abs(F.col("rank") - F.col("old_rank"))).alias("max_err"),
+        # D3+D4) + next iteration's dangling sum
+        err = F.abs(F.col("rank") - F.col("old_rank"))
+        return new_ranks, [
+            F.sum(err).alias("l1"),
+            F.max(err).alias("max_err"),
             F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("s"),
-        ).first()
-        l1, max_err = float(row["l1"]), float(row["max_err"])
+        ]
+
+    def observe(it: int, row):
+        nonlocal dangling_sum
+        l1 = float(row["l1"])
         dangling_sum = float(row["s"] or 0.0)
-        it += 1
-        wall_ms = (time.monotonic() - t0) * 1000.0
-        metrics.append(
-            {"iteration": it, "l1": l1, "max_err": max_err, "wall_ms": wall_ms}
-        )
-        old = ranks
-        ranks = new_ranks.select("id", "rank", "dangling", "tele")
         # stop when L1 < threshold, checked after the update
         # (pagerank_mpi.c:220-226; L1 is the operative criterion)
-        if l1 < cfg.tol:
-            converged = True
-        truncate = converged or it % cfg.checkpoint_interval == 0
-        if truncate:
-            if ckpt.enabled:
-                ckpt.save(ranks, it, metrics, converged=converged)
-                path = ckpt.step_path(it)
-            else:
-                path = f"{scratch}/step_{it:06d}"
-                ranks.write.mode("overwrite").parquet(path)
-            # parquet round-trip: bounded plan depth + stable partitioning
-            new_ranks.unpersist()
-            ranks = (
-                spark.read.parquet(path)
-                .repartition(num_parts, "id")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            ranks.count()
-            # prune the previous scratch snapshot (keep the live one — the
-            # returned DataFrame's cache may refill from it)
-            if prev_scratch_path is not None:
-                shutil.rmtree(prev_scratch_path, ignore_errors=True)
-            if not ckpt.enabled:
-                prev_scratch_path = path
-        old.unpersist()
-        if converged:
-            break
+        record = {"iteration": it, "l1": l1, "max_err": float(row["max_err"])}
+        return record, l1 < cfg.tol
 
+    ranks, it, converged, metrics = state.run(
+        init, step, observe, cfg.max_iter, resume=resume
+    )
     edges_w.unpersist()
     return PageRankResult(
         ranks.select("id", "rank"), it, converged, metrics

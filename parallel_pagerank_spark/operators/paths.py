@@ -15,7 +15,7 @@ frontier); the distance table is updated by anti-join ∪ improved rows
 because the improved frame is flat, each update references the previous
 distance table exactly once (linear lineage, truncated every
 _TRUNCATE_EVERY rounds), avoiding both the doubling hazard documented
-at operators/pagerank.py:26-31 and the old per-round eager checkpoint's
+at plans/iterate.py and the old per-round eager checkpoint's
 full O(V) re-write (r3 verdict superstep-cost fix).
 With integer-valued double weights every sum and min is exact
 in IEEE double (up to 2^53), so a fixed-round run is hash-comparable

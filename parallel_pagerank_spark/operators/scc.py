@@ -23,7 +23,7 @@ vertex "wins" both label races settles in parallel).
 Scale shape: each F/B computation is the same synchronous min-label
 superstep as connected components (edge ⋈ labels shuffled on the join
 key, map-side partial min, eager localCheckpoint lineage truncation per
-superstep — the operators/pagerank.py:26-31 plan-doubling hazard).
+superstep — the plans/iterate.py plan-doubling hazard).
 Directed propagation has no pointer-jumping shortcut, so supersteps per
 fixpoint are O(longest shortest path inside the active subgraph); the
 ``max_iter`` bound caps runaway chains and is reported via
@@ -309,7 +309,7 @@ def topological_levels(
     total work across the run is O(depth-bounded relaxations), not
     O(rounds · E); fixpoint in exactly depth(DAG) rounds (monotone — a
     settled longest path never shrinks). Each round's merged state is
-    eagerly localCheckpoint-truncated (the operators/pagerank.py:26-31
+    eagerly localCheckpoint-truncated (the plans/iterate.py
     plan-doubling hazard: the merge reads the previous level table
     twice). A cycle makes levels grow forever; the ``max_iter`` bound
     converts that into converged=False instead of a hang — the

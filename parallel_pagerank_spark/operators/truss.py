@@ -27,7 +27,7 @@ endpoints; the per-round state (edge set + support) is materialized
 AND lineage-truncated with an eager localCheckpoint (the loop
 references it five times — three triangle sides, the anti-join, and
 the decrement join — so an un-truncated plan grows geometrically; the
-plan-doubling hazard documented at operators/pagerank.py:26-31).
+plan-doubling hazard documented at plans/iterate.py).
 For hub-skewed graphs the initial wedge join is the classic candidate
 for degree orientation (enumerate from the lower-degree endpoint,
 triangles.py:34 does this for counting); the ordered a<b<c form used

@@ -1,25 +1,40 @@
-"""Superstep state management for iterative fixpoint loops.
+"""The superstep driver for iterative fixpoint loops over keyed state.
 
-Catalyst has no fixpoint operator (SURVEY.md §4.3); every iterative
-operator (PageRank, CC, LPA) runs a driver-side loop whose per-superstep
-state DataFrame must (a) stay hash-partitioned on its key so the join
-against the persisted edge table is zero-shuffle, (b) be persisted so the
-next superstep reuses it, and (c) have its lineage truncated periodically
-(parquet round-trip) so plan size stays bounded — each superstep references
-the previous state TWICE (gather join + update join), so the logical plan
-DOUBLES per superstep: 2^interval copies of the post-truncation base plan.
-interval=5 caps that at 32 copies of a ~15-node scan plan; larger intervals
-OOM the driver on long runs. This class owns that
-lifecycle, including pruning scratch snapshots and wiring the durable
-checkpoint manifest when one is configured.
+Catalyst has no fixpoint operator (SURVEY.md §4.3), so PageRank's
+DataFrame tier, connected components and label propagation each need a
+driver-side loop; ``SuperstepState.run`` is that loop, once. An operator
+supplies only its superstep math; the driver owns resume, the step
+counter, persisting and timing each superstep's one fused action, the
+metrics record, the stop rule, lineage truncation and unpersisting.
+
+The state is persisted, not ``localCheckpoint``-ed: ``persist`` keeps it
+hash-partitioned on its key, so the join against the edge table
+(partitioned on the same key) is zero-shuffle, while a localCheckpoint-ed
+frame is a bare RDD scan that every join re-Exchanges.
+
+Lineage is truncated every ``truncate_interval`` supersteps by a parquet
+round-trip (with a checkpoint directory, the durable snapshot). The state
+feeds BOTH the gather join and the update join, so the un-truncated
+logical plan DOUBLES per superstep and driver-side Catalyst analysis is
+O(2^interval) between truncations (measured: interval 7 costs ~6x the
+per-superstep driver time of interval 5 on a tiny graph where analysis
+dominates). Keep it small; 5 is the default.
+
+Unpersist pitfall: ``DataFrame.unpersist`` only drops the cache entry of
+the receiver's own plan. On a projection of the persisted frame
+(``persisted.select(...)``) it silently does nothing and the cached frame
+stays pinned for the session, so the driver keeps a handle on the frame
+it actually persisted and unpersists that one, a superstep late.
 """
 
 from __future__ import annotations
 
 import shutil
 import tempfile
+import time
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from .checkpoint import SuperstepCheckpointer
@@ -40,12 +55,52 @@ class SuperstepState:
         self._scratch = None
         self._prev_scratch_path = None
         self.df: DataFrame | None = None
+        # the frame actually persisted for the current state (``df`` may be
+        # a projection of it)
+        self._persisted: DataFrame | None = None
 
-    def init(self, df: DataFrame) -> DataFrame:
-        self.df = df.repartition(self.num_partitions, self.key).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        return self.df
+    def run(
+        self,
+        init: Callable[[], DataFrame],
+        step: Callable[[DataFrame], tuple[DataFrame, list[Column]]],
+        observe: Callable[[int, Row], tuple[dict, bool]],
+        max_iter: int,
+        resume: bool = False,
+    ) -> tuple[DataFrame, int, bool, list[dict]]:
+        """Run supersteps until ``observe`` reports convergence or
+        ``max_iter`` supersteps have run in total (resumed ones included).
+
+        ``init()`` builds the starting state (not called when a snapshot
+        is resumed). ``step(state)`` returns the next frame, still
+        carrying the previous values, and the aggregate columns of the
+        superstep's one fused action; ``observe(iteration, row)`` turns
+        that action's row into (metrics record, converged). The next
+        state is the frame projected onto the state's columns. Returns
+        (state, supersteps, converged, metrics)."""
+        steps, metrics, converged = 0, [], False
+        snap = None
+        if resume and self.ckpt is not None:
+            snap = self.ckpt.load_latest(SparkSession.active())
+        if snap is not None:
+            start, steps, metrics, converged = snap
+            if converged:
+                return start, steps, True, metrics
+        else:
+            start = init()
+        self.df = self._persisted = start.repartition(
+            self.num_partitions, self.key
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        while steps < max_iter and not converged:
+            t0 = time.monotonic()
+            nxt, aggs = step(self.df)
+            nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
+            steps += 1
+            # the ONE action of the superstep; it also materializes ``nxt``
+            record, converged = observe(steps, nxt.agg(*aggs).first())
+            record["wall_ms"] = (time.monotonic() - t0) * 1000.0
+            metrics.append(record)
+            self.advance(nxt, steps, metrics, converged)
+        return self.df, steps, converged, metrics
 
     def advance(
         self,
@@ -54,34 +109,40 @@ class SuperstepState:
         metrics: list[dict],
         converged: bool,
     ) -> DataFrame:
-        """Install the new superstep state (assumed just materialized by the
-        caller's metrics action); truncate lineage every ``interval``."""
-        old = self.df
-        self.df = new_df
+        """Install ``new_df`` (persisted and just materialized by the
+        superstep's action; it may still carry the previous values) as the
+        state, projected onto the state's columns. Truncate lineage every
+        ``interval`` supersteps and at convergence, then unpersist the
+        frame persisted for the previous state."""
+        prev = self._persisted
+        self._persisted = new_df
+        self.df = new_df.select(*self.df.columns)
         durable = self.ckpt is not None and self.ckpt.enabled
         if converged or iteration % self.interval == 0:
             spark = new_df.sparkSession
             if durable:
                 self.ckpt.save(
-                    new_df, iteration, metrics, converged=converged
+                    self.df, iteration, metrics, converged=converged
                 )
                 path = self.ckpt.step_path(iteration)
             else:
                 if self._scratch is None:
                     self._scratch = tempfile.mkdtemp(prefix="superstep_")
                 path = f"{self._scratch}/step_{iteration:06d}"
-                new_df.write.mode("overwrite").parquet(path)
+                self.df.write.mode("overwrite").parquet(path)
             new_df.unpersist()
-            self.df = (
+            self.df = self._persisted = (
                 spark.read.parquet(path)
                 .repartition(self.num_partitions, self.key)
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
             self.df.count()
+            # prune the previous scratch snapshot; keep the live one, which
+            # the returned state's cache may refill from
             if self._prev_scratch_path is not None:
                 shutil.rmtree(self._prev_scratch_path, ignore_errors=True)
             if not durable:
                 self._prev_scratch_path = path
-        if old is not None:
-            old.unpersist()
+        if prev is not None:
+            prev.unpersist()
         return self.df

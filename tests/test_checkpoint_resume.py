@@ -114,6 +114,40 @@ def test_components_resume_from_partial_checkpoint(spark, tmp_path):
     assert again.converged and again.supersteps == 12
 
 
+def test_superstep_loops_leave_one_cached_state(spark):
+    """Each keyed-state superstep loop keeps exactly one cached frame (the
+    returned state) once it returns: every superseded superstep's
+    persisted frame is released, truncating or not."""
+    from parallel_pagerank_spark.operators.components import (
+        connected_components,
+    )
+    from parallel_pagerank_spark.operators.labelprop import (
+        label_propagation,
+    )
+
+    df = edges_df(spark, [(i, i + 1) for i in range(11)] + SMALL_GRAPH)
+    runs = {
+        "cc": lambda: connected_components(
+            df, fast_path_edges=0, max_iter=4
+        ).components,
+        "lpa": lambda: label_propagation(
+            df, fast_path_edges=0, max_iter=5
+        ).labels,
+        "pagerank": lambda: pagerank(
+            df, config=PageRankConfig(spmv_mode="shuffle", max_iter=9)
+        ).ranks,
+    }
+
+    def cached():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    for name, run in runs.items():
+        before = cached()
+        out = run()
+        assert cached() - before <= 1, name
+        assert out.count() == 12, name
+
+
 def test_edge_list_roundtrip(spark, tmp_path):
     df = edges_df(spark, SMALL_GRAPH)
     path = str(tmp_path / "edges_out")

@@ -139,6 +139,21 @@ def test_jpeg_rejects_unsupported_sof_and_garbage():
 # ------------------------------------------------------------ progressive
 
 
+def test_jpeg_marker_walk_skips_fill_bytes():
+    """Any marker may be preceded by 0xFF fill bytes (T.81 B.1.1.2): the
+    decoder and the header-only walk see the same image with or without
+    them."""
+    from parallel_pagerank_spark.functions.jpeg import jpeg_dimensions
+
+    img = _pattern()
+    enc = encode_jpeg(img, quality=85)
+    # pad before the first marker after SOI and before SOF0
+    sof = enc.index(b"\xff\xc0")
+    padded = enc[:2] + b"\xff\xff" + enc[2:sof] + b"\xff" + enc[sof:]
+    assert np.array_equal(decode_jpeg(padded), decode_jpeg(enc))
+    assert jpeg_dimensions(padded) == jpeg_dimensions(enc) == (48, 64)
+
+
 def test_jpeg_progressive_equals_baseline_decode():
     """The default progressive scan script transmits every coefficient
     bit down to Al = 0, so decoding the progressive encoding must give

@@ -691,3 +691,34 @@ def test_session_window_streaming(spark, tmp_path):
     # the watermark; the final session stays open in state (append-mode
     # contract)
     assert [(r["user_id"], r["n_events"]) for r in got] == [("u", 2)]
+
+
+def test_oracle_sql_result_columns_are_scalar():
+    """Every driver oracle yields only int64/double/string/bool/timestamp
+    style columns: DuckDB widens an integer ``sum`` to HUGEINT (Arrow
+    decimal128) and ``list()`` aggregates to Arrow lists, and neither
+    hashes equal to the BIGINT/string columns Spark emits for the same
+    query."""
+    import os
+
+    import __spark_entry__ as entry
+
+    duckdb = pytest.importorskip("duckdb")
+    if not os.path.isdir(SF_DIR):
+        pytest.skip(f"{SF_DIR} absent")
+    con = duckdb.connect()
+    for t in (
+        "region nation customer supplier part orders lineitem events "
+        "documents embeddings"
+    ).split():
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{SF_DIR}/{t}.parquet')"
+        )
+    bad = [
+        f"{name}.{f.name}: {f.type}"
+        for name, sql in entry.oracle_sql().items()
+        for f in con.execute(sql).fetch_arrow_table().schema
+        if str(f.type).startswith(("decimal", "list", "large_list"))
+    ]
+    assert bad == []

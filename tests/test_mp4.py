@@ -108,6 +108,29 @@ def test_mp4_rejects_non_bmff_and_missing_tracks():
     assert mp4.is_mp4(blob)
 
 
+def test_mp4_missing_sample_table_boxes_raise_value_error():
+    """A video track whose stbl lacks stsc or both chunk-offset boxes
+    fails with the module's ValueError contract, not a TypeError."""
+    _, blob = _mux(n=3)
+    for box in (b"stsc", b"stco"):
+        # retype the box in place (moov comes last): same size, so the
+        # container stays well-formed
+        at = blob.rindex(box)
+        hidden = blob[:at] + b"free" + blob[at + 4 :]
+        with pytest.raises(ValueError, match="stbl missing stsc/stco"):
+            mp4.mp4_video_sample_table(hidden)
+
+
+def test_mp4_mux_rejects_fps_not_dividing_timescale():
+    samples, _ = _mux(n=2)
+    for fps in (0, -5, 7, 601, 1200):
+        with pytest.raises(ValueError, match="fps"):
+            mp4.encode_mp4_mjpeg(samples, 64, 48, fps=fps)
+    for fps in (1, 24, 600):
+        blob = mp4.encode_mp4_mjpeg(samples, 64, 48, fps=fps)
+        assert [raw for _, raw in mp4.extract_video_samples(blob)] == samples
+
+
 def test_mp4_fuzz_truncation_and_bitflips_bounded():
     """Corrupt containers must raise (or parse to SOMETHING) quickly —
     never hang: malformed box sizes are the classic parser-loop trap."""

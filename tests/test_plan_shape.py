@@ -251,7 +251,7 @@ def test_superstep_loops_truncate_lineage():
     expressions that reference the PREVIOUS round's state twice (data +
     total, or settled + anti-join), so an un-truncated logical plan
     DOUBLES per round and driver-side Catalyst analysis goes exponential
-    (the hazard documented at operators/pagerank.py:26-31; observed as a
+    (the hazard documented at plans/iterate.py; observed as a
     multi-minute hang by iteration ~10 before the localCheckpoint fix).
     This pins eager localCheckpoint truncation inside each loop body."""
     import pathlib

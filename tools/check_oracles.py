@@ -1,6 +1,12 @@
 """Simulate the driver's correctness gate: run every __spark_entry__
 queries() entry and its oracle_sql() in DuckDB on the same parquet,
-compare row count, column names, and order-insensitive values.
+compare row count, column names, per-column types, and order-insensitive
+values.
+
+Types are compared strictly (the Spark schema against the DuckDB result's
+Arrow schema mapped to Spark types): the gate hashes values, so an oracle
+``sum`` that DuckDB widens to HUGEINT (``Decimal`` values) fails there
+against Spark's BIGINT even though the numbers are equal.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
@@ -9,10 +15,12 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
+from pyspark.sql.pandas.types import from_arrow_type
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from parallel_pagerank_spark import get_spark  # noqa: E402
@@ -69,15 +77,30 @@ def main():
             print(f"rows-only {name}: {len(srows)} rows, cols={scols}")
             continue
         try:
-            rel = con.execute(oracles[name])
-            ocols = [d[0] for d in rel.description]
-            orows = [dict(zip(ocols, t)) for t in rel.fetchall()]
+            tbl = con.execute(oracles[name]).fetch_arrow_table()
+            ocols = tbl.column_names
+            orows = [
+                dict(zip(ocols, t)) for t in con.from_arrow(tbl).fetchall()
+            ]
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {e}")
             failures += 1
             continue
         if sorted(scols) != sorted(ocols):
             print(f"FAIL {name}: cols spark={sorted(scols)} duck={sorted(ocols)}")
+            failures += 1
+            continue
+        stypes = {f.name: f.dataType.simpleString() for f in sdf.schema}
+        otypes = {
+            f.name: from_arrow_type(f.type).simpleString() for f in tbl.schema
+        }
+        if stypes != otypes:
+            diff = {
+                c: (stypes[c], otypes[c])
+                for c in scols
+                if stypes[c] != otypes[c]
+            }
+            print(f"FAIL {name}: types (spark, duck) {diff}")
             failures += 1
             continue
         if len(srows) != len(orows):

@@ -5,9 +5,11 @@ propagation to fixpoint over the undirected edge set, component id = min
 vertex id in the component, convergence when zero labels change.
 
 Per superstep: every vertex takes the min of its own label and its
-neighbors' labels — a join (edges ⋈ labels on src) + groupBy(dst).min, then
-an outer merge with the previous labels. ONE action per superstep (fused
-changed-count + not-yet-converged check). The loop is the keyed-state
+neighbors' labels — ONE join (edges ⋈ labels on src) + groupBy(dst).min.
+The edge table carries a self-row (v, v) per vertex, so the vertex's own
+label enters its group through the same join and no merge with the
+previous labels is needed. ONE action per superstep (fused changed-count +
+not-yet-converged check). The loop is the keyed-state
 superstep driver in plans/iterate.py, shared with PageRank and LPA:
 lineage truncation every ``checkpoint_interval`` supersteps, durable
 parquet checkpoints and resume.
@@ -157,12 +159,7 @@ def connected_components(
     )
     if vertices is None:
         vertices = vertices_from_edges(edges)
-    sym = (
-        symmetrize(edges)
-        .repartition(num_parts, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
+    sym = _neighbors_with_self(edges, vertices, num_parts)
     state = SuperstepState(
         num_parts,
         "id",
@@ -171,30 +168,17 @@ def connected_components(
     )
 
     def step(labels: DataFrame):
-        # neighbor minimum: push each vertex's label along every edge,
-        # take min at the destination. Both join sides are pre-partitioned
+        # push each vertex's label along every edge and its self-row, take
+        # the min at the destination. Both join sides are pre-partitioned
         # on the join key → zero-shuffle join; shuffle_hash avoids sorts.
-        neigh_min = (
+        new_labels = (
             sym.join(
                 labels.hint("shuffle_hash"), sym.src == labels.id, "inner"
             )
             .groupBy("dst")
-            .agg(F.min("label").alias("neigh_label"))
-        )
-        new_labels = (
-            labels.select("id", F.col("label").alias("old_label"))
-            .join(
-                neigh_min.hint("shuffle_hash"),
-                labels.id == neigh_min.dst,
-                "left",
-            )
-            .select(
-                "id",
-                "old_label",
-                F.least(
-                    F.col("old_label"), F.col("neigh_label")
-                ).alias("label"),
-            )
+            .agg(F.min("label").alias("label"), _own("label"))
+            .filter(F.col("old_label").isNotNull())
+            .select(F.col("dst").alias("id"), "old_label", "label")
         )
         return new_labels, [_changed_count()]
 
@@ -211,6 +195,35 @@ def connected_components(
         steps,
         converged,
         metrics,
+    )
+
+
+def _neighbors_with_self(
+    edges: DataFrame, vertices: DataFrame, num_parts: int
+) -> DataFrame:
+    """The label loops' edge table: the undirected edge set plus one
+    self-row ``(v, v)`` per vertex, hash-partitioned on src and persisted.
+    ``symmetrize`` drops real self-loops, so ``src == dst`` marks the
+    self-row. Joined against the labels, the self-row carries each vertex's
+    old label into its own group, so one aggregation yields the next state;
+    a group without a self-row is an edge into a vertex outside
+    ``vertices`` and is dropped."""
+    sym = (
+        symmetrize(edges)
+        .unionByName(
+            vertices.select(F.col("id").alias("src"), F.col("id").alias("dst"))
+        )
+        .repartition(num_parts, "src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    sym.count()
+    return sym
+
+
+def _own(col: str):
+    """Aggregate column ``old_label``: ``col`` on the group's self-row."""
+    return F.max(F.when(F.col("src") == F.col("dst"), F.col(col))).alias(
+        "old_label"
     )
 
 

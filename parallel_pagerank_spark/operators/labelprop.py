@@ -11,6 +11,9 @@ oscillate on bipartite structures, so a fixed cap is part of the contract).
 Plan shape per superstep: edges ⋈ labels (gather neighbor labels) →
 groupBy(dst, label).count (label frequencies) → per-vertex argmax via
 max_by on the (count, -label) pair — a single aggregation, no window sort.
+The edge table carries a self-row (v, v) per vertex (not counted as a
+neighbor), so the vertex's old label arrives through the same join and the
+labels are referenced once per superstep.
 """
 
 from __future__ import annotations
@@ -20,11 +23,16 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..plans.iterate import SuperstepState
-from .components import _changed_count, _observe_changed, _route_fast
-from .graph import symmetrize, vertices_from_edges
+from .components import (
+    _changed_count,
+    _neighbors_with_self,
+    _observe_changed,
+    _own,
+    _route_fast,
+)
+from .graph import vertices_from_edges
 
 
 @dataclass
@@ -112,36 +120,40 @@ def label_propagation(
     )
     if vertices is None:
         vertices = vertices_from_edges(edges)
-    sym = (
-        symmetrize(edges)
-        .repartition(num_parts, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
+    sym = _neighbors_with_self(edges, vertices, num_parts)
 
     def step(labels: DataFrame):
+        is_self = F.col("src") == F.col("dst")
         freq = (
             sym.join(
                 labels.hint("shuffle_hash"), sym.src == labels.id, "inner"
             )
             .groupBy("dst", "label")
-            .agg(F.count("*").alias("cnt"))
+            .agg(
+                F.count(F.when(~is_self, 1)).alias("cnt"),
+                # non-null on the group of the vertex's own label only
+                _own("label"),
+            )
         )
         # argmax by (cnt desc, label asc): max_by over the ordered struct
-        # (cnt, -label) — one aggregation instead of a window + row_number
-        best = freq.groupBy("dst").agg(
-            F.max_by(
-                F.col("label"),
-                F.struct(F.col("cnt"), (-F.col("label")).alias("neg")),
-            ).alias("new_label")
-        )
+        # (cnt, -label) — one aggregation instead of a window + row_number.
+        # A self-row-only group has a null key and never wins; a vertex
+        # without neighbors keeps its old label.
         new_labels = (
-            labels.select("id", F.col("label").alias("old_label"))
-            .join(
-                best.hint("shuffle_hash"), labels.id == best.dst, "left"
+            freq.groupBy("dst")
+            .agg(
+                F.max_by(
+                    F.col("label"),
+                    F.when(
+                        F.col("cnt") > 0,
+                        F.struct(F.col("cnt"), (-F.col("label")).alias("neg")),
+                    ),
+                ).alias("new_label"),
+                F.max("old_label").alias("old_label"),
             )
+            .filter(F.col("old_label").isNotNull())
             .select(
-                "id",
+                F.col("dst").alias("id"),
                 "old_label",
                 F.coalesce(F.col("new_label"), F.col("old_label")).alias(
                     "label"

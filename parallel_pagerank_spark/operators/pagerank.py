@@ -11,10 +11,18 @@ hash aggregation on dst with map-side partial aggregation — the same
 partial/final split the MPI code does by hand with p_t1_local.
 
 Physical layout (SURVEY.md §4.3):
-- ``edges`` are weighted once with 1/out_degree, hash-repartitioned by src,
-  and persisted: iteration-invariant, shuffled exactly once.
+- ``edges`` are weighted once with 1/out_degree, extended by one self-row
+  ``(v, v, w=null)`` per vertex, hash-repartitioned by src (dst in
+  broadcast mode) and persisted: iteration-invariant, shuffled exactly once.
 - ``ranks`` carries an iteration-invariant ``dangling`` flag so the dangling
   sum (pagerank_mpi.c:166-174) never needs a join.
+- ranks are read ONCE per superstep, by the gather join: it pulls each
+  vertex's rank row onto its out-edges AND onto its self-row, so the
+  single ``groupBy(dst)`` yields the whole next state — Σ rank·w plus old
+  rank, teleport weight and dangling flag read off the self-row (the
+  in-place update of pagerank_mpi.c:194-196 needs no second join against
+  the ranks). A group without a self-row is an edge into a non-vertex and
+  is dropped.
 - ONE Spark action per superstep: a fused aggregate computing L1, max-error
   (pagerank_mpi.c:201-213) AND the next iteration's dangling sum.
 - the loop itself is the keyed-state superstep driver
@@ -53,6 +61,7 @@ class PageRankResult:
 
 def _prepare_weighted_edges(
     edges: DataFrame,
+    vertices: DataFrame,
     num_partitions: int,
     salt_buckets: int,
     partition_key: str = "src",
@@ -74,6 +83,11 @@ def _prepare_weighted_edges(
     split across s salt values; the per-iteration join key becomes
     (src, salt) so one hub no longer pins a whole partition. The ranks side
     is replicated s× for hub ids only (a small broadcast-joined dimension).
+
+    Every vertex also gets one self-row ``(v, v, w=null, salt=0)``: in the
+    superstep it picks up the vertex's own rank row, which is how the one
+    gather aggregation carries the old state into the new one. Real edges
+    always have a non-null w, so ``w IS NULL`` marks the self-row.
     Returns (weighted edges with salt column, hub-id DataFrame or None).
     """
     aggs = [F.count("*").alias("out_deg")]
@@ -105,6 +119,12 @@ def _prepare_weighted_edges(
         if weight_col is None
         else (F.col(weight_col).cast("double") / F.col("wsum"))
     )
+    self_rows = vertices.select(
+        F.col("id").alias("src"),
+        F.col("id").alias("dst"),
+        F.lit(None).cast("double").alias("w"),
+        F.lit(0).alias("salt"),
+    )
     if salt_buckets <= 1:
         return (
             w.select(
@@ -112,7 +132,9 @@ def _prepare_weighted_edges(
                 "dst",
                 w_expr.alias("w"),
                 F.lit(0).alias("salt"),
-            ).repartition(num_partitions, partition_key),
+            )
+            .unionByName(self_rows)
+            .repartition(num_partitions, partition_key),
             None,
         )
     total = edges.count()
@@ -129,7 +151,12 @@ def _prepare_weighted_edges(
         .otherwise(F.lit(0))
         .alias("salt"),
     )
-    return salted.repartition(num_partitions, "src", "salt"), hubs
+    return (
+        salted.unionByName(self_rows).repartition(
+            num_partitions, "src", "salt"
+        ),
+        hubs,
+    )
 
 
 def pagerank(
@@ -216,6 +243,7 @@ def pagerank(
     )
     edges_w, hubs = _prepare_weighted_edges(
         edges,
+        vertices,
         num_parts,
         0 if use_broadcast else cfg.salt_buckets,
         partition_key="dst" if use_broadcast else "src",
@@ -295,21 +323,19 @@ def pagerank(
             # zero-shuffle superstep: edges are dst-partitioned and cached;
             # ranks broadcast into the gather join (streamed-side
             # partitioning is preserved, so the dst aggregation needs no
-            # exchange and the update join is already aligned)
+            # exchange)
             gather_side = F.broadcast(ranks)
-            cond = edges_w.src == ranks.id
         elif hubs is None:
-            gather_side = ranks
-            cond = edges_w.src == gather_side.id
+            gather_side = ranks.hint("shuffle_hash")
         else:
             # replicate hub ranks across salt buckets (hubs is tiny →
             # broadcast); the (src, salt) join key splits each hub's edges
-            # over salt_buckets partitions
+            # over salt_buckets partitions. Self-rows carry salt 0, so each
+            # one meets exactly one replica.
             gather_side = (
                 ranks.join(F.broadcast(hubs), "id", "left")
-                .select(
-                    "id",
-                    "rank",
+                .withColumn(
+                    "rsalt",
                     F.explode(
                         F.when(
                             F.col("is_hub").isNotNull(),
@@ -317,33 +343,32 @@ def pagerank(
                                 F.lit(0), F.lit(cfg.salt_buckets - 1)
                             ),
                         ).otherwise(F.array(F.lit(0)))
-                    ).alias("rsalt"),
+                    ),
                 )
+                .hint("shuffle_hash")
             )
-            cond = (edges_w.src == gather_side.id) & (
-                edges_w.salt == gather_side.rsalt
-            )
-        joined = (
-            edges_w.join(gather_side, cond, "inner")
-            if use_broadcast
-            else edges_w.join(gather_side.hint("shuffle_hash"), cond, "inner")
-        )
-        contribs = joined.groupBy("dst").agg(
-            F.sum(F.col("rank") * F.col("w")).alias("contrib")
-        )
-        # update (pagerank_mpi.c:194-196): contribs arrive hash(dst,P) from
-        # the aggregation exchange — aligns with ranks hash(id,P)
+        cond = edges_w.src == gather_side.id
+        if hubs is not None:
+            cond = cond & (edges_w.salt == gather_side.rsalt)
+
+        def own(c: str):
+            # the value on the vertex's own rank row, via its self-row
+            return F.max(F.when(F.col("w").isNull(), F.col(c)))
+
+        # update (pagerank_mpi.c:194-196) in the same aggregation; a group
+        # without a self-row is an edge into a vertex outside ``vertices``
         new_ranks = (
-            ranks.select(
-                "id", "dangling", "tele", F.col("rank").alias("old_rank")
+            edges_w.join(gather_side, cond, "inner")
+            .groupBy("dst")
+            .agg(
+                F.sum(F.col("rank") * F.col("w")).alias("contrib"),
+                own("rank").alias("old_rank"),
+                own("dangling").alias("dangling"),
+                own("tele").alias("tele"),
             )
-            .join(
-                contribs.hint("shuffle_hash"),
-                ranks.id == contribs.dst,
-                "left",
-            )
+            .filter(F.col("old_rank").isNotNull())
             .select(
-                "id",
+                F.col("dst").alias("id"),
                 "dangling",
                 "tele",
                 "old_rank",
@@ -379,6 +404,8 @@ def pagerank(
         init, step, observe, cfg.max_iter, resume=resume
     )
     edges_w.unpersist()
+    if hubs is not None:
+        hubs.unpersist()
     return PageRankResult(
         ranks.select("id", "rank"), it, converged, metrics
     )

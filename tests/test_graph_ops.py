@@ -300,3 +300,62 @@ def test_negative_ids_pagerank_not_routed(spark):
     df = edges_df(spark, [(-3, 1), (1, 0)])
     res = pagerank(df, config=PageRankConfig(tol=1e-4))
     assert res.mode == "dataframe"
+
+
+# an explicit vertex table plus edges that touch ids outside it (7, 8, 9),
+# both as src and as dst; 6's only out-edge leaves the vertex set and 10
+# has no edges at all
+OUTSIDE_EDGES = [
+    (0, 1), (1, 2), (2, 0), (2, 9), (3, 7), (7, 1), (8, 2), (4, 5),
+    (5, 4), (4, 8), (9, 3), (6, 9), (3, 0), (1, 3),
+]
+OUTSIDE_VERTICES = [0, 1, 2, 3, 4, 5, 6, 10]
+
+
+def test_explicit_vertices_drop_outside_ids(spark):
+    """Ids outside an explicit ``vertices`` table get no rank or label,
+    and whatever flows into or out of them is dropped: mass sent to a
+    non-vertex leaks, a non-vertex sends nothing, and a neighbor outside
+    the table never counts. Pinned as literals on every DataFrame-tier
+    SpMV mode, CC and LPA."""
+    from parallel_pagerank_spark.config import PageRankConfig
+    from parallel_pagerank_spark.operators.pagerank import pagerank
+
+    df = edges_df(spark, OUTSIDE_EDGES)
+    verts = spark.createDataFrame(
+        [(i,) for i in OUTSIDE_VERTICES], "id long"
+    )
+    want_ranks = {
+        0: 0.06956581276970647,
+        1: 0.0837431685810332,
+        2: 0.056626636445756454,
+        3: 0.056626636445756454,
+        4: 0.06236950563971513,
+        5: 0.0484200001113923,
+        6: 0.020979022668498618,
+        10: 0.020979022668498618,
+    }
+    for mode in ("shuffle", "broadcast"):
+        res = pagerank(
+            df,
+            vertices=verts,
+            config=PageRankConfig(tol=0.0, max_iter=8, spmv_mode=mode),
+        )
+        got = {r["id"]: r["rank"] for r in res.ranks.collect()}
+        assert res.iterations == 8, mode
+        assert set(got) == set(want_ranks), mode
+        for v, rank in want_ranks.items():
+            assert got[v] == pytest.approx(rank, rel=0, abs=1e-15), (mode, v)
+
+    cc = connected_components(df, vertices=verts, fast_path_edges=0)
+    assert cc.converged and cc.supersteps == 2
+    assert {r["id"]: r["component"] for r in cc.components.collect()} == {
+        0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 6, 10: 10,
+    }
+    lpa = label_propagation(
+        df, vertices=verts, max_iter=5, fast_path_edges=0
+    )
+    assert lpa.supersteps == 5
+    assert {r["id"]: r["label"] for r in lpa.labels.collect()} == {
+        0: 0, 1: 0, 2: 0, 3: 0, 4: 5, 5: 4, 6: 6, 10: 10,
+    }

@@ -139,16 +139,20 @@ def test_empty_graph(spark):
     assert res.converged
 
 
+# a hub whose out-degree (59) is far above E/P, plus short cycles
+HUB_STAR = (
+    [(0, i) for i in range(1, 60)]
+    + [(i, 0) for i in range(1, 60)]
+    + [(i, i % 7) for i in range(1, 60)]
+)
+
+
 def test_salted_hub_skew_matches(spark):
     # salting must not change results: star hub with out-degree >> E/P
-    n = 60
-    edges = (
-        [(0, i) for i in range(1, n)]
-        + [(i, 0) for i in range(1, n)]
-        + [(i, i % 7) for i in range(1, n)]
+    res_plain, oracle_iters, got_plain, want = run_both(
+        spark, HUB_STAR, tol=1e-4
     )
-    res_plain, oracle_iters, got_plain, want = run_both(spark, edges, tol=1e-4)
-    df = edges_df(spark, edges)
+    df = edges_df(spark, HUB_STAR)
     res_salted = pagerank(
         df, config=PageRankConfig(tol=1e-4, salt_buckets=4)
     )
@@ -156,6 +160,22 @@ def test_salted_hub_skew_matches(spark):
     got_vec = np.array([got[i] for i in sorted(got)])
     assert res_salted.iterations == oracle_iters
     assert np.allclose(got_vec, want, atol=1e-6)
+
+
+def test_salted_shuffle_matches_oracle(spark):
+    """The salted SpMV itself: ``spmv_mode="shuffle"`` keeps the star off
+    the broadcast path (which passes no salt), so hub 0 (out-degree 59,
+    above the max(32, E/P) hub threshold) has its edges split over 4 salt
+    buckets and its rank replicated to each."""
+    oracle_ranks, oracle_iters, _ = pagerank_oracle(HUB_STAR, tol=1e-4)
+    res = pagerank(
+        edges_df(spark, HUB_STAR),
+        config=PageRankConfig(tol=1e-4, spmv_mode="shuffle", salt_buckets=4),
+    )
+    got = {r["id"]: r["rank"] for r in res.ranks.collect()}
+    assert res.mode == "dataframe"
+    assert res.iterations == oracle_iters
+    assert np.allclose([got[i] for i in range(60)], oracle_ranks, atol=1e-6)
 
 
 def test_vectorized_fast_path_parity(spark):

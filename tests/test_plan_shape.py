@@ -22,9 +22,10 @@ def _plan(df) -> str:
 
 def test_spmv_join_is_coparitioned_zero_shuffle(spark):
     """The per-superstep gather join must not re-shuffle either side when
-    edges and ranks are pre-partitioned on the join key: exactly the two
-    intended exchanges appear downstream (contribution agg + update
-    alignment), and none sit between the persisted inputs and the join."""
+    edges and ranks are pre-partitioned on the join key: exactly the one
+    intended exchange appears downstream (the gather aggregation, which
+    also yields the next state), and none sit between the persisted inputs
+    and the join."""
     from pyspark.storagelevel import StorageLevel
 
     P = 8
@@ -386,3 +387,64 @@ def test_k_truss_single_full_enumeration(spark, monkeypatch):
     assert res.rounds >= 2, "cascade case must take multiple peels"
     assert calls["full"] == 1
     assert res.full_enumerations == 1
+
+
+def _logical_joins(df) -> int:
+    """Join nodes in the un-truncated logical plan (lineage included)."""
+    tree = df._jdf.queryExecution().logical().treeString()
+    return sum(
+        line.lstrip(" :+-").startswith("Join ") for line in tree.splitlines()
+    )
+
+
+def test_keyed_superstep_plan_grows_linearly(spark, monkeypatch):
+    """Each keyed-state superstep references its state in exactly one
+    join, so between truncations the logical plan grows by a constant
+    number of joins per superstep. A second reference to the state (an
+    update join against it) would double the plan every superstep instead
+    (the hazard documented at plans/iterate.py). No run converges or
+    truncates within its 4 supersteps (interval 5)."""
+    from parallel_pagerank_spark.config import PageRankConfig
+    from parallel_pagerank_spark.operators.components import (
+        connected_components,
+    )
+    from parallel_pagerank_spark.operators.labelprop import (
+        label_propagation,
+    )
+    from parallel_pagerank_spark.operators.pagerank import pagerank
+    from parallel_pagerank_spark.plans.iterate import SuperstepState
+
+    path = edges_df(spark, [(i, i + 1) for i in range(12)])
+    star = edges_df(
+        spark, [(0, i) for i in range(1, 40)] + [(i, 0) for i in range(1, 40)]
+    )
+
+    def pr(graph, **kw):
+        cfg = PageRankConfig(tol=0.0, max_iter=4, **kw)
+        return lambda: pagerank(graph, config=cfg)
+
+    runs = {
+        "pagerank/broadcast": pr(path, spmv_mode="broadcast"),
+        "pagerank/shuffle": pr(path, spmv_mode="shuffle"),
+        "pagerank/salted": pr(star, spmv_mode="shuffle", salt_buckets=4),
+        "cc": lambda: connected_components(
+            path, max_iter=4, fast_path_edges=0
+        ),
+        "lpa": lambda: label_propagation(path, max_iter=4, fast_path_edges=0),
+    }
+    joins: list[int] = []
+    real_advance = SuperstepState.advance
+
+    def counting_advance(self, *args):
+        out = real_advance(self, *args)
+        joins.append(_logical_joins(out))
+        return out
+
+    monkeypatch.setattr(SuperstepState, "advance", counting_advance)
+    for name, run in runs.items():
+        joins.clear()
+        res = run()
+        assert not res.converged, name
+        assert len(joins) == 4, name
+        step2, step3, step4 = joins[1:]
+        assert step3 - step2 == step4 - step3 > 0, (name, joins)

@@ -17,7 +17,7 @@ round-trip (with a checkpoint directory, the durable snapshot).
 
 Plan-doubling hazard: a loop whose step references the previous state
 twice (say a gather join plus an update join against the same frame)
-DOUBLES its un-truncated logical plan every superstep, so driver-side
+DOUBLES its un-truncated logical plan every superstep, so Catalyst
 analysis is O(2^k) between truncations. The keyed loops here reference
 the state once: their edge tables carry one self-row ``(v, v)`` per
 vertex, so the single gather join also brings each vertex's old values
@@ -29,13 +29,13 @@ Why the interval is still 5: a second growth source remains that is not
 in the logical plan. Measured on shuffle-SpMV PageRank, 20k edges, 2k
 vertices, local[4] on a 4-core host, 20 supersteps: interval 5 took
 13.9 s, 8 took 15.8 s, 10 took 27.5 s (the former two-join form at
-interval 5: 25.1 s). Without
-truncation the superstep's fused action takes 0.5-0.75 s up to
-superstep 6, then 0.8, 1.5, 3.0, 4.1 s at supersteps 7-10, while its
-task count stays constant and each of its jobs gains one skipped stage
-per superstep: the cost is on the driver. It comes with adaptive query
-execution (4 jobs per action): with ``spark.sql.adaptive.enabled=false``
-(1 job) the action stays at 0.2-0.3 s from superstep 3 through 11.
+interval 5: 25.1 s). Without truncation the superstep's fused action
+takes 0.5-0.75 s up to superstep 6, then 0.8, 1.5, 3.0, 4.1 s at
+supersteps 7-10, while its task count stays constant and each of its
+jobs gains one skipped stage per superstep: the cost is in scheduling,
+not in tasks. It comes with adaptive query execution (4 jobs per
+action): with ``spark.sql.adaptive.enabled=false`` (1 job) the action
+stays at 0.2-0.3 s from superstep 3 through 11.
 
 Unpersist pitfall: ``DataFrame.unpersist`` only drops the cache entry of
 the receiver's own plan. On a projection of the persisted frame

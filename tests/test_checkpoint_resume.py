@@ -22,8 +22,8 @@ from .oracles import SMALL_GRAPH, pagerank_oracle
 def test_checkpoint_manifest_and_resume(spark, tmp_path):
     ck = str(tmp_path / "ck")
     df = edges_df(spark, SMALL_GRAPH)
-    # interval 5, the engine default: longer intervals cost more driver
-    # time per superstep between truncations (measured in the
+    # interval 5, the engine default: longer intervals cost more
+    # scheduling time per superstep between truncations (measured in the
     # plans/iterate.py docstring), which would measure Spark's scheduler
     # instead of the checkpoint contract
     # tol 1e-4 (reference default, 16 iters vs 26): the checkpoint

@@ -36,10 +36,12 @@ class PageRankConfig:
     # ("shuffle" = always scale-safe path, "broadcast" = force)
     spmv_mode: str = "auto"
     broadcast_threshold: int = 20_000_000
-    # auto-route small dense-id graphs (default max_id+1 vertex rule, no
-    # teleport/weights/checkpointing) to the vectorized Arrow fast path
-    # (operators/pagerank_fast.py): below ~10^6 vertices the DataFrame
-    # loop's per-superstep scheduling overhead dominates actual compute.
+    # vertex bound of the numpy tier (operators/pagerank_fast.py): dense-id
+    # graphs under the default max_id+1 vertex rule, with no teleport,
+    # weights, warm start, checkpointing or salting, run there when
+    # N <= fast_path_threshold and E <= 10^7 (the edge bound every
+    # vectorized operator shares); below that size the DataFrame loop's
+    # per-superstep scheduling overhead dominates actual compute.
     # 0 disables the routing.
     fast_path_threshold: int = 2_000_000
 

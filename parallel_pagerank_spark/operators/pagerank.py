@@ -44,7 +44,12 @@ from pyspark.storagelevel import StorageLevel
 from ..config import PageRankConfig
 from ..plans.checkpoint import SuperstepCheckpointer
 from ..plans.iterate import SuperstepState
+from .components import _route_fast
 from .graph import out_degrees, vertices_from_edges
+
+# edge bound of the vectorized tier: the ``fast_path_edges`` default shared
+# by CC, LSS, LPA, HITS, BFS, SSSP and SCC (the edge list is collected once)
+_FAST_PATH_EDGES = 10_000_000
 
 
 @dataclass
@@ -54,8 +59,8 @@ class PageRankResult:
     converged: bool
     metrics: list[dict] = field(default_factory=list)
     # which execution path produced the result: "dataframe" (distributed
-    # superstep loop — the 100 TB scale path) or "vectorized" (Arrow/numpy
-    # fast path for rank vectors that fit driver memory)
+    # superstep loop — the 100 TB scale path) or "vectorized" (one Arrow
+    # collect of the edges, then the whole loop in numpy on the driver)
     mode: str = "dataframe"
 
 
@@ -196,29 +201,17 @@ def pagerank(
     100 TB is the difference between minutes and an hour.
     """
     cfg = config or PageRankConfig()
-    spark = edges.sparkSession
-    num_parts = cfg.num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    d = cfg.damping
-
-    default_dense_vertices = vertices is None
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    n = vertices.count()
-    if n == 0:
-        empty = spark.createDataFrame([], "id long, rank double")
-        return PageRankResult(empty, 0, True, [])
-
-    # auto-route small dense-id graphs to the vectorized fast path: below
-    # ~10^6 vertices the superstep loop is pure scheduling overhead
-    # (~0.3-0.5 s/iteration regardless of data). Only when nothing requires
-    # the distributed machinery — default dense vertex rule, uniform
-    # teleport, unweighted, no checkpoint/resume/salting, mode "auto".
+    # vectorized tier for graphs that fit the driver: below that size the
+    # superstep loop is pure scheduling overhead (~0.3-0.5 s/iteration
+    # regardless of data). The Python checks come first, so a call that
+    # needs the distributed machinery (explicit vertices, a forced SpMV
+    # mode, teleport, weights, warm start, checkpoint/resume, salting) runs
+    # no routing job; the rest pay one aggregation, the route every
+    # vectorized operator shares.
     if (
-        default_dense_vertices
+        vertices is None
         and cfg.spmv_mode == "auto"
-        and 0 < n <= cfg.fast_path_threshold
+        and cfg.fast_path_threshold > 0
         and teleport is None
         and weight_col is None
         and init_ranks is None
@@ -226,17 +219,24 @@ def pagerank(
         and cfg.checkpoint_dir is None
         and cfg.salt_buckets == 0
     ):
-        lo = edges.agg(
-            F.least(F.min("src"), F.min("dst")).alias("lo")
-        ).first()["lo"]
-        # negative ids fall outside the dense 0..max_id space the numpy
-        # kernels index into — keep those on the DataFrame loop
-        if lo is not None and lo >= 0:
-            from .pagerank_fast import pagerank_vectorized
+        n_fast = _route_fast(edges, None, _FAST_PATH_EDGES)
+        if n_fast is not None and n_fast <= cfg.fast_path_threshold:
+            from .pagerank_fast import _pagerank_numpy
 
-            return pagerank_vectorized(
-                edges, vertices=vertices, config=cfg
-            )
+            return _pagerank_numpy(edges, n_fast, cfg)
+
+    spark = edges.sparkSession
+    num_parts = cfg.num_partitions or int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    d = cfg.damping
+
+    if vertices is None:
+        vertices = vertices_from_edges(edges)
+    n = vertices.count()
+    if n == 0:
+        empty = spark.createDataFrame([], "id long, rank double")
+        return PageRankResult(empty, 0, True, [])
 
     use_broadcast = cfg.spmv_mode == "broadcast" or (
         cfg.spmv_mode == "auto" and n <= cfg.broadcast_threshold

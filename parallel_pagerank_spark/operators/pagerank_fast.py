@@ -1,58 +1,36 @@
-"""Vectorized PageRank fast paths (SURVEY.md §4.3 optional optimization).
+"""Vectorized PageRank tier (SURVEY.md §4.3 optional optimization).
 
-The pure-DataFrame loop (operators/pagerank.py) shuffles ~E contribution
-rows per superstep through the groupBy(dst) exchange — correct and
-scale-safe, but shuffle-bound: the map-side partial aggregation builds
-million-group hash tables with almost no reduction. This module holds TWO
-tiers of the reference's SpMV inner loop (pagerank_mpi.c:176-192):
+The DataFrame loop (operators/pagerank.py) pays a fixed scheduling cost
+per superstep whatever the data size. When both the edge list and the rank
+vector fit driver memory, ``pagerank()`` routes here instead: one Arrow
+collect of the edges, then the reference's SpMV inner loop
+(pagerank_mpi.c:176-192) and update/Allreduce (194-213) entirely in numpy
+(``np.bincount``), zero Spark jobs per iteration.
 
-- tier 2 (``_pagerank_numpy``): edges AND ranks fit driver memory — one
-  Arrow collect, the whole loop in numpy, zero Spark jobs per iteration.
-- tier 1 (below): only the RANK VECTOR fits (N ≲ 10^8-10^9; the
-  24 MB/3M-vertex regime of the bench graphs) — edges stay distributed:
-
-- edges are hash-partitioned by dst ONCE and cached; each partition owns a
-  disjoint dst subset.
-- per superstep the rank vector is broadcast (one in-memory copy in local
-  mode; torrent broadcast on a cluster), and ``mapInPandas`` accumulates
-  each partition's contributions into a single local ``np.bincount`` array
-  — per-partition output is only that partition's ~N/P owned dsts.
-  ZERO shuffle per superstep.
-- the update p' = d*(contrib + S/N) + (1-d)/N, dangling sum, and the fused
-  L1/max-error metrics run on the driver in numpy over the collected
-  contribution rows (~N rows via Arrow), exactly mirroring the reference's
-  update/Allreduce structure (pagerank_mpi.c:194-213).
-
-This is deliberately the MPI execution model re-hosted on Spark — the
-documented fast path when N fits, with the DataFrame loop as the 100 TB
-scale path (its per-executor memory is O(E/P + N/P), never O(N)).
-
-Requires ids in [0, N): pass dense vertex ids (derive.py id_mode="dense")
-or the default max_id+1 rule's dense space.
+The route (``pagerank()`` via ``components._route_fast``) only sends the
+default dense vertex rule here, with non-negative ids, N ≤
+``fast_path_threshold`` and E ≤ 10^7, so ids always index ``0..N-1``
+directly. Anything larger runs the DataFrame loop, the scale path.
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import DataFrame
 
 from ..config import PageRankConfig
-from .graph import out_degrees, vertices_from_edges
 from .pagerank import PageRankResult
 
 
 def _pagerank_numpy(
     edges: DataFrame, n: int, cfg: PageRankConfig
 ) -> PageRankResult:
-    """Tier-2 fast path: BOTH the rank vector and the edge list fit driver
-    memory — one Arrow collect of the edges, then the whole power
-    iteration in numpy (np.bincount SpMV), zero Spark jobs per iteration.
-    Same arithmetic as the distributed loop (w = 1/out_deg precomputed,
+    """The whole power iteration over ids ``0..n-1`` in numpy after one
+    Arrow collect of the edges (np.bincount SpMV). Same arithmetic as the
+    distributed loop (w = 1/out_deg precomputed,
     p' = d·(contrib + S/N) + (1−d)/N, L1 stop after update)."""
     spark = edges.sparkSession
     pdf = edges.select("src", "dst").toPandas()
@@ -90,145 +68,4 @@ def _pagerank_numpy(
     ranks = spark.createDataFrame(
         pd.DataFrame({"id": np.arange(n, dtype=np.int64), "rank": p})
     )
-    return PageRankResult(ranks, it, converged, metrics, mode="vectorized")
-
-
-def pagerank_vectorized(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    config: PageRankConfig | None = None,
-    driver_edge_threshold: int = 5_000_000,
-) -> PageRankResult:
-    cfg = config or PageRankConfig()
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-    num_parts = cfg.num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    d = cfg.damping
-
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    n = vertices.count()
-    if n == 0:
-        empty = spark.createDataFrame([], "id long, rank double")
-        return PageRankResult(empty, 0, True, [])
-    bounds = edges.agg(
-        F.greatest(F.max("src"), F.max("dst")).alias("m"),
-        F.least(F.min("src"), F.min("dst")).alias("lo"),
-    ).first()
-    max_id = bounds["m"]
-    if max_id is not None and (
-        max_id >= n or max_id < 0 or int(bounds["lo"]) < 0
-    ):
-        raise ValueError(
-            "pagerank_vectorized requires dense ids in [0, N); got "
-            f"ids in [{bounds['lo']}, {max_id}] for N={n}. Use "
-            "id_mode='dense' or the DataFrame pagerank()."
-        )
-    # the VERTEX set must be dense too: an explicit sparse vertex set whose
-    # ids exceed N (but whose edges only touch low ids) would otherwise pass
-    # the edge check and get ranks silently relabeled 0..N-1
-    vbounds = vertices.agg(
-        F.min("id").alias("lo"), F.max("id").alias("hi")
-    ).first()
-    if vbounds["lo"] != 0 or vbounds["hi"] != n - 1:
-        raise ValueError(
-            "pagerank_vectorized requires dense vertex ids 0..N-1; got "
-            f"min={vbounds['lo']}, max={vbounds['hi']} for N={n}. Use "
-            "id_mode='dense' or the DataFrame pagerank()."
-        )
-
-    if (
-        driver_edge_threshold > 0
-        and edges.count() <= driver_edge_threshold
-    ):
-        return _pagerank_numpy(edges, n, cfg)
-
-    # iteration-invariant: weighted edges partitioned by OWNER (dst)
-    deg = out_degrees(edges)
-    edges_w = (
-        edges.join(deg.withColumnRenamed("id", "src"), "src")
-        .select(
-            "src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w")
-        )
-        .repartition(num_parts, "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges_w.count()
-
-    # driver-side state (the reference keeps exactly this: p_t0/p_t1 arrays,
-    # pagerank_mpi.h:10-14)
-    out_deg_rows = deg.toPandas()
-    out_deg_vec = np.zeros(n, dtype=np.int64)
-    out_deg_vec[out_deg_rows["id"].to_numpy()] = out_deg_rows[
-        "out_deg"
-    ].to_numpy()
-    dangling_mask = out_deg_vec == 0
-    p = np.full(n, 1.0 / n, dtype=np.float64)
-
-    metrics: list[dict] = []
-    converged = False
-    it = 0
-    n_cap = n
-    while it < cfg.max_iter:
-        t0 = time.monotonic()
-        bc = sc.broadcast(p)
-
-        def spmv(
-            batches: Iterator[pd.DataFrame], _bc=bc, _n=n_cap
-        ) -> Iterator[pd.DataFrame]:
-            local = np.zeros(_n, dtype=np.float64)
-            touched = False
-            for pdf in batches:
-                src = pdf["src"].to_numpy()
-                dst = pdf["dst"].to_numpy()
-                w = pdf["w"].to_numpy()
-                local += np.bincount(
-                    dst, weights=_bc.value[src] * w, minlength=_n
-                )
-                touched = True
-            if touched:
-                nz = np.nonzero(local)[0]
-                yield pd.DataFrame(
-                    {"dst": nz.astype(np.int64), "contrib": local[nz]}
-                )
-
-        contrib_pdf = edges_w.mapInPandas(
-            spmv, "dst long, contrib double"
-        ).toPandas()
-        bc.unpersist()
-        contrib = np.zeros(n, dtype=np.float64)
-        if len(contrib_pdf):
-            # partitions own disjoint dst sets → no cross-partition dups,
-            # but assignment-by-accumulate stays correct regardless
-            np.add.at(
-                contrib,
-                contrib_pdf["dst"].to_numpy(),
-                contrib_pdf["contrib"].to_numpy(),
-            )
-        dangling_sum = float(p[dangling_mask].sum())
-        p_new = d * (contrib + dangling_sum / n) + (1.0 - d) / n
-        delta = np.abs(p_new - p)
-        l1 = float(delta.sum())
-        max_err = float(delta.max())
-        p = p_new
-        it += 1
-        metrics.append(
-            {
-                "iteration": it,
-                "l1": l1,
-                "max_err": max_err,
-                "wall_ms": (time.monotonic() - t0) * 1000.0,
-            }
-        )
-        if l1 < cfg.tol:
-            converged = True
-            break
-
-    edges_w.unpersist()
-    ranks_pdf = pd.DataFrame(
-        {"id": np.arange(n, dtype=np.int64), "rank": p}
-    )
-    ranks = spark.createDataFrame(ranks_pdf)
     return PageRankResult(ranks, it, converged, metrics, mode="vectorized")

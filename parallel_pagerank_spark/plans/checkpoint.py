@@ -48,7 +48,7 @@ class SuperstepCheckpointer:
     ) -> None:
         if not self.enabled:
             return
-        path = os.path.join(self.base, f"step_{iteration:06d}")
+        path = self.step_path(iteration)
         state.write.mode("overwrite").parquet(path)
         # per-partition lineage: row count per output partition of the
         # snapshot, keyed by the physical partition id it came from

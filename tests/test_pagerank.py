@@ -179,40 +179,61 @@ def test_salted_shuffle_matches_oracle(spark):
 
 
 def test_vectorized_fast_path_parity(spark):
-    from parallel_pagerank_spark.operators.pagerank_fast import (
-        pagerank_vectorized,
-    )
-
     for edges in [
         SMALL_GRAPH,
         load_edge_list("/root/reference/sample_graphs/medium_graph.txt"),
         [(0, 1), (1, 2), (3, 0), (3, 5), (5, 3)],  # dangling + id gap
     ]:
         oracle_ranks, oracle_iters, _ = pagerank_oracle(edges, tol=1e-6)
-        df = edges_df(spark, edges)
-        # both tiers: full-driver numpy loop (default here: edges fit) and
-        # the distributed-edges mapInPandas SpMV (threshold 0 forces it)
-        for thresh in (5_000_000, 0):
-            res = pagerank_vectorized(
-                df,
-                config=PageRankConfig(tol=1e-6),
-                driver_edge_threshold=thresh,
-            )
-            assert res.iterations == oracle_iters
-            got = {r["id"]: r["rank"] for r in res.ranks.collect()}
-            got_vec = np.array([got[i] for i in sorted(got)])
-            assert np.allclose(got_vec, oracle_ranks, atol=1e-6)
+        res = pagerank(
+            edges_df(spark, edges), config=PageRankConfig(tol=1e-6)
+        )
+        assert res.mode == "vectorized"
+        assert res.iterations == oracle_iters
+        got = {r["id"]: r["rank"] for r in res.ranks.collect()}
+        got_vec = np.array([got[i] for i in sorted(got)])
+        assert np.allclose(got_vec, oracle_ranks, atol=1e-6)
 
 
-def test_vectorized_rejects_sparse_ids(spark):
-    from parallel_pagerank_spark.operators.pagerank_fast import (
-        pagerank_vectorized,
-    )
+def test_explicit_sparse_vertex_set_keeps_ids(spark, monkeypatch):
+    """An explicit vertex set with an id beyond the edges' dense range
+    (5, with N=3) runs the DataFrame loop without a routing job: vertex 5
+    keeps its own id and rank instead of being relabelled into 0..N-1."""
+    from parallel_pagerank_spark.operators import pagerank as pagerank_mod
 
+    def no_route(*args):
+        raise AssertionError("explicit vertices must skip the routing")
+
+    monkeypatch.setattr(pagerank_mod, "_route_fast", no_route)
     df = edges_df(spark, [(0, 1)])
-    v = spark.createDataFrame([(0,)], "id long")  # N=1 < max_id
-    with pytest.raises(ValueError, match="dense ids"):
-        pagerank_vectorized(df, vertices=v)
+    v = spark.createDataFrame([(0,), (1,), (5,)], "id long")
+    res = pagerank(df, vertices=v, config=PageRankConfig())
+    assert res.mode == "dataframe"
+    got = {r["id"]: r["rank"] for r in res.ranks.collect()}
+    assert set(got) == {0, 1, 5}
+    shuffled = pagerank(
+        df, vertices=v, config=PageRankConfig(spmv_mode="shuffle")
+    )
+    want = {r["id"]: r["rank"] for r in shuffled.ranks.collect()}
+    assert set(want) == {0, 1, 5}
+    for i in got:
+        assert got[i] == pytest.approx(want[i], abs=1e-12)
+
+
+def test_routed_call_job_count(spark):
+    """A routed call costs one routing aggregation and one Arrow collect
+    of the edges: with the caller's collect of the ranks, at most 4 Spark
+    jobs end to end."""
+    sc = spark.sparkContext
+    sc.setJobGroup("routed_pagerank", "routed pagerank job count")
+    try:
+        res = pagerank(edges_df(spark, SMALL_GRAPH))
+        res.ranks.toPandas()
+        jobs = sc.statusTracker().getJobIdsForGroup("routed_pagerank")
+    finally:
+        sc.setJobGroup("", "")
+    assert res.mode == "vectorized"
+    assert len(jobs) <= 4
 
 
 @pytest.mark.exhaustive  # default tier: driver oracle row pagerank_personalized20 hash-checks this surface every round
@@ -323,16 +344,3 @@ def test_auto_fast_path_routing(spark):
     assert set(a) == set(b)
     for i in a:
         assert a[i] == pytest.approx(b[i], abs=1e-9)
-
-
-def test_vectorized_rejects_sparse_vertex_set(spark):
-    """An explicit sparse VERTEX set (ids exceed N) must be rejected even
-    when the edges only touch low ids."""
-    from parallel_pagerank_spark.operators.pagerank_fast import (
-        pagerank_vectorized,
-    )
-
-    df = edges_df(spark, [(0, 1)])
-    v = spark.createDataFrame([(0,), (1,), (5,)], "id long")
-    with pytest.raises(ValueError, match="dense vertex ids"):
-        pagerank_vectorized(df, vertices=v)

@@ -195,29 +195,41 @@ def test_vectorized_fast_path_parity(spark):
         assert np.allclose(got_vec, oracle_ranks, atol=1e-6)
 
 
-def test_explicit_sparse_vertex_set_keeps_ids(spark, monkeypatch):
-    """An explicit vertex set with an id beyond the edges' dense range
-    (5, with N=3) runs the DataFrame loop without a routing job: vertex 5
-    keeps its own id and rank instead of being relabelled into 0..N-1."""
+def _assert_explicit_vertices_kept(spark, monkeypatch, edges, ids):
+    """Explicit vertices skip the vectorized route before any routing job
+    and run the DataFrame loop: the result holds exactly the caller's ids,
+    none relabelled into 0..N-1, with the shuffle-mode ranks."""
     from parallel_pagerank_spark.operators import pagerank as pagerank_mod
 
     def no_route(*args):
         raise AssertionError("explicit vertices must skip the routing")
 
     monkeypatch.setattr(pagerank_mod, "_route_fast", no_route)
-    df = edges_df(spark, [(0, 1)])
-    v = spark.createDataFrame([(0,), (1,), (5,)], "id long")
+    df = edges_df(spark, edges)
+    v = spark.createDataFrame([(i,) for i in sorted(ids)], "id long")
     res = pagerank(df, vertices=v, config=PageRankConfig())
     assert res.mode == "dataframe"
     got = {r["id"]: r["rank"] for r in res.ranks.collect()}
-    assert set(got) == {0, 1, 5}
+    assert set(got) == ids
     shuffled = pagerank(
         df, vertices=v, config=PageRankConfig(spmv_mode="shuffle")
     )
     want = {r["id"]: r["rank"] for r in shuffled.ranks.collect()}
-    assert set(want) == {0, 1, 5}
+    assert set(want) == ids
     for i in got:
         assert got[i] == pytest.approx(want[i], abs=1e-12)
+
+
+def test_vectorized_rejects_sparse_ids(spark, monkeypatch):
+    # N=1 < max edge id: the vectorized tier would index vertex 1 out of
+    # range; the DataFrame loop keeps only the caller's vertex 0
+    _assert_explicit_vertices_kept(spark, monkeypatch, [(0, 1)], {0})
+
+
+def test_vectorized_rejects_sparse_vertex_set(spark, monkeypatch):
+    # vertex 5 lies beyond the edges' dense range (N=3) and must keep its
+    # own id and rank, even though the edges only touch low ids
+    _assert_explicit_vertices_kept(spark, monkeypatch, [(0, 1)], {0, 1, 5})
 
 
 def test_routed_call_job_count(spark):

@@ -27,8 +27,8 @@ class PageRankConfig:
     # the MPI code keeps all state in process memory)
     checkpoint_interval: int = 5
     checkpoint_dir: str | None = None
-    # physical tuning
-    num_partitions: int | None = None  # None → spark.sql.shuffle.partitions
+    # physical tuning (the partition count is the session's
+    # spark.sql.shuffle.partitions, see session.py)
     salt_buckets: int = 0  # >0 → salt high-degree sources in the SpMV agg
     # SpMV strategy: "auto" broadcasts the rank vector into the gather join
     # when N <= broadcast_threshold (zero shuffles per superstep; the rank

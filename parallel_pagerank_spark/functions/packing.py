@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import shuffle_partitions
 from .spans import _tokens
 
 __all__ = ["pack_sequences", "pack_sequence_text"]
@@ -54,7 +55,7 @@ def _global_offsets(counts: DataFrame, key_col: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     spark = counts.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    nparts = shuffle_partitions(spark)
     # persist pins the sampled range boundaries: pid must be identical
     # between the bases action and the offsets computation
     bucketed = (

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import shuffle_partitions
 from .components import _route_fast
 
 
@@ -101,41 +102,26 @@ def _bfs_fast(
     return BfsResult(out, steps, converged, metrics, mode="vectorized")
 
 
-def bfs_distances(
+def _frontier_bfs(
     edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int = 8,
-    directed: bool = True,
-    num_partitions: int | None = None,
-    fast_path_edges: int = 10_000_000,
-) -> BfsResult:
-    """Hop distance from the nearest source along ``edges``.
-
-    sources: DataFrame with an ``id`` column (duplicates fine).
-    directed=False symmetrizes first. Unreached vertices are absent from
-    the result (callers wanting the dense rule can left-join
-    graph.vertices_from_edges). Small dense-id graphs auto-route to a
-    vectorized numpy tier — integer distances, bit-identical results —
-    under the same bounds/guard/opt-out as the components fast path
-    (``BfsResult.mode`` reports which ran)."""
-    n_fast = _route_fast(edges, None, fast_path_edges)
-    if n_fast is not None:
-        fast = _bfs_fast(edges, sources, n_fast, max_hops, directed)
-        if fast is not None:
-            return fast
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    seeds: DataFrame,
+    keys: list[str],
+    max_hops: int,
+    directed: bool,
+) -> tuple[DataFrame, int, bool, list[dict]]:
+    """The distributed frontier loop shared by :func:`bfs_distances`
+    (``keys=["id"]``) and :func:`landmark_distances`
+    (``keys=["id", "landmark"]``). ``seeds`` holds the distinct ``keys``
+    rows at distance 0. Returns ``(settled, supersteps, converged,
+    metrics)``; ``settled`` has columns ``keys + ["dist"]``."""
+    num_parts = shuffle_partitions(edges.sparkSession)
     e = edges.select("src", "dst")
     if not directed:
         e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     e = e.repartition(num_parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
     settled = (
-        sources.select("id")
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
+        seeds.withColumn("dist", F.lit(0).cast("long"))
         .repartition(num_parts, "id")
         .localCheckpoint(eager=True)
     )
@@ -151,9 +137,9 @@ def bfs_distances(
         # eager localCheckpoint materializes AND truncates lineage
         nxt = (
             e.join(frontier, e.src == frontier.id)
-            .select(F.col("dst").alias("id"))
+            .select(F.col("dst").alias("id"), *keys[1:])
             .distinct()
-            .join(settled, "id", "left_anti")
+            .join(settled, keys, "left_anti")
             .withColumn("dist", F.lit(steps).cast("long"))
             .repartition(num_parts, "id")
             .localCheckpoint(eager=True)
@@ -171,7 +157,32 @@ def bfs_distances(
         if n_frontier == 0:
             converged = True
     e.unpersist()
-    return BfsResult(settled.select("id", "dist"), steps, converged, metrics)
+    return settled.select(*keys, "dist"), steps, converged, metrics
+
+
+def bfs_distances(
+    edges: DataFrame,
+    sources: DataFrame,
+    max_hops: int = 8,
+    directed: bool = True,
+    fast_path_edges: int = 10_000_000,
+) -> BfsResult:
+    """Hop distance from the nearest source along ``edges``.
+
+    sources: DataFrame with an ``id`` column (duplicates fine).
+    directed=False symmetrizes first. Unreached vertices are absent from
+    the result (callers wanting the dense rule can left-join
+    graph.vertices_from_edges). Small dense-id graphs auto-route to a
+    vectorized numpy tier — integer distances, bit-identical results —
+    under the same bounds/guard/opt-out as the components fast path
+    (``BfsResult.mode`` reports which ran)."""
+    n_fast = _route_fast(edges, None, fast_path_edges)
+    if n_fast is not None:
+        fast = _bfs_fast(edges, sources, n_fast, max_hops, directed)
+        if fast is not None:
+            return fast
+    seeds = sources.select("id").distinct()
+    return BfsResult(*_frontier_bfs(edges, seeds, ["id"], max_hops, directed))
 
 
 def distance_histogram(res: BfsResult) -> DataFrame:
@@ -196,7 +207,6 @@ def landmark_distances(
     landmarks: DataFrame,
     max_hops: int = 8,
     directed: bool = True,
-    num_partitions: int | None = None,
 ) -> LandmarkResult:
     """Per-landmark hop distances: for every (vertex, landmark) pair with
     d(landmark → vertex) <= max_hops, one row (id, landmark, dist).
@@ -216,55 +226,15 @@ def landmark_distances(
     src — the frontier carries (id, landmark) so the join fans out each
     edge once per landmark currently expanding through it — a distinct
     on (dst, landmark), an anti-join against the settled pair set, then
-    an eager localCheckpoint (same lineage-truncation discipline as
-    bfs_distances above; the settled set references itself round over
-    round)."""
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    e = e.repartition(num_parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    settled = (
+    an eager localCheckpoint: the loop of :func:`bfs_distances`, run by
+    the shared ``_frontier_bfs`` with the landmark as a second key."""
+    seeds = (
         landmarks.select("id")
         .distinct()
         .select("id", F.col("id").alias("landmark"))
-        .withColumn("dist", F.lit(0).cast("long"))
-        .repartition(num_parts, "id")
-        .localCheckpoint(eager=True)
     )
-    n_frontier = settled.count()
-    frontier = settled
-    metrics: list[dict] = [{"superstep": 0, "frontier": n_frontier}]
-    steps = 0
-    converged = n_frontier == 0
-    while steps < max_hops and n_frontier > 0:
-        steps += 1
-        nxt = (
-            e.join(frontier, e.src == frontier.id)
-            .select(F.col("dst").alias("id"), "landmark")
-            .distinct()
-            .join(settled, ["id", "landmark"], "left_anti")
-            .withColumn("dist", F.lit(steps).cast("long"))
-            .repartition(num_parts, "id")
-            .localCheckpoint(eager=True)
-        )
-        n_frontier = nxt.count()
-        # union of flat frames — linear lineage, no per-round
-        # materialization (see bfs_distances)
-        settled = settled.unionByName(nxt)
-        frontier = nxt
-        metrics.append({"superstep": steps, "frontier": n_frontier})
-        if n_frontier == 0:
-            converged = True
-    e.unpersist()
     return LandmarkResult(
-        settled.select("id", "landmark", "dist"), steps, converged, metrics
+        *_frontier_bfs(edges, seeds, ["id", "landmark"], max_hops, directed)
     )
 
 
@@ -312,7 +282,6 @@ def closeness_centrality(res: "LandmarkResult") -> DataFrame:
 def pseudo_diameter(
     edges: DataFrame,
     max_hops: int = 6,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Bounded double-sweep diameter lower bound (the classic
     pseudo-diameter heuristic, e.g. Magnien/Latapy/Habib 2009): BFS from
@@ -336,16 +305,12 @@ def pseudo_diameter(
             "diameter_lb long, n_reached long",
         )
     s1 = spark.createDataFrame([(int(start),)], "id long")
-    b1 = bfs_distances(
-        edges, s1, max_hops=max_hops, num_partitions=num_partitions
-    )
+    b1 = bfs_distances(edges, s1, max_hops=max_hops)
     far = (
         b1.distances.orderBy(F.desc("dist"), F.asc("id")).limit(1).first()
     )
     s2 = spark.createDataFrame([(int(far["id"]),)], "id long")
-    b2 = bfs_distances(
-        edges, s2, max_hops=max_hops, num_partitions=num_partitions
-    )
+    b2 = bfs_distances(edges, s2, max_hops=max_hops)
     return b2.distances.agg(
         F.lit(int(start)).cast("long").alias("source_id"),
         F.lit(int(far["id"])).cast("long").alias("far_id"),

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.splits import split_bucket
+from ..session import shuffle_partitions
+from .graph import symmetrize
 
 
 @dataclass
@@ -53,7 +55,6 @@ def greedy_coloring(
     edges: DataFrame,
     max_iter: int = 64,
     salt: int = 0,
-    num_partitions: int | None = None,
 ) -> ColoringResult:
     """Greedy (Δ+1)-coloring of the undirected simple graph of
     ``edges(src, dst)``. Self-loops are dropped (uncolorable);
@@ -62,18 +63,9 @@ def greedy_coloring(
     with color 0.
     """
     spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(spark)
     sym = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            ).filter(F.col("src") != F.col("dst"))
-        )
-        .distinct()
+        symmetrize(edges)
         .repartition(num_parts, "src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -33,6 +33,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..plans.checkpoint import SuperstepCheckpointer
 from ..plans.iterate import SuperstepState
+from ..session import shuffle_partitions
 from .graph import symmetrize, vertices_from_edges
 
 # vectorized fast path bounds: the label array is O(N) driver memory
@@ -130,7 +131,6 @@ def connected_components(
     max_iter: int = 200,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
-    num_partitions: int | None = None,
     fast_path_edges: int = 10_000_000,
     resume: bool = False,
 ) -> ComponentsResult:
@@ -153,10 +153,7 @@ def connected_components(
         n_fast = _route_fast(edges, vertices, fast_path_edges)
         if n_fast is not None:
             return _components_fast(edges, n_fast, max_iter)
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     if vertices is None:
         vertices = vertices_from_edges(edges)
     sym = _neighbors_with_self(edges, vertices, num_parts)
@@ -244,7 +241,6 @@ def large_star_small_star(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 50,
-    num_partitions: int | None = None,
     fast_path_edges: int = 10_000_000,
 ) -> ComponentsResult:
     """Alternating large-star / small-star connected components
@@ -262,10 +258,7 @@ def large_star_small_star(
     n_fast = _route_fast(edges, vertices, fast_path_edges)
     if n_fast is not None:
         return _components_fast(edges, n_fast, max_iter)
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     if vertices is None:
         vertices = vertices_from_edges(edges)
 

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import shuffle_partitions
+
 
 def turn_vertices(transcripts: DataFrame, id_mode: str = "hash") -> DataFrame:
     """``(id, conv_id, turn_idx)`` — one vertex per turn."""
@@ -53,7 +55,7 @@ def turn_vertices(transcripts: DataFrame, id_mode: str = "hash") -> DataFrame:
         from pyspark.storagelevel import StorageLevel
 
         spark = transcripts.sparkSession
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        nparts = shuffle_partitions(spark)
         counts = transcripts.groupBy("conv_id").agg(
             F.count("*").alias("n_turns")
         )

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import shuffle_partitions
 from .components import _route_fast
 from .graph import vertices_from_edges
 
@@ -100,7 +101,6 @@ def hits(
     edges: DataFrame,
     max_iter: int = 10,
     vertices: DataFrame | None = None,
-    num_partitions: int | None = None,
     fast_path_edges: int = 10_000_000,
 ) -> HitsResult:
     """Fixed-iteration HITS. ``max_iter`` full authority+hub rounds; L1
@@ -113,10 +113,7 @@ def hits(
     n_fast = _route_fast(edges, vertices, fast_path_edges)
     if n_fast is not None:
         return _hits_fast(edges, n_fast, max_iter)
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     if vertices is None:
         vertices = vertices_from_edges(edges)
     # one edge shuffle, reused every round by both half-steps

@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import shuffle_partitions
 from .graph import vertices_from_edges
 
 
@@ -45,7 +46,6 @@ def katz_centrality(
     beta: float = 1.0,
     max_iter: int = 20,
     vertices: DataFrame | None = None,
-    num_partitions: int | None = None,
 ) -> KatzResult:
     """Fixed-iteration Katz centrality over directed ``edges(src, dst)``.
 
@@ -55,10 +55,7 @@ def katz_centrality(
     partial sum, so no spectral estimate is needed here. Parallel edges
     contribute multiply (walk counting), matching the unrolled oracle.
     """
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     if vertices is None:
         vertices = vertices_from_edges(edges)
     verts = vertices.select("id")

@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import shuffle_partitions
 from .graph import symmetrize
 
 
@@ -41,12 +42,8 @@ def k_core(
     edges: DataFrame,
     k: int = 3,
     max_iter: int = 100,
-    num_partitions: int | None = None,
 ) -> KCoreResult:
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     cur = (
         symmetrize(edges)
         .repartition(num_parts, "src")

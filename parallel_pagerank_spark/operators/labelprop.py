@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.iterate import SuperstepState
+from ..session import shuffle_partitions
 from .components import (
     _changed_count,
     _neighbors_with_self,
@@ -106,7 +107,6 @@ def label_propagation(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 10,
-    num_partitions: int | None = None,
     fast_path_edges: int = 10_000_000,
 ) -> LabelPropagationResult:
     """Synchronous LPA. Small dense-id graphs auto-route to the vectorized
@@ -114,10 +114,7 @@ def label_propagation(
     n_fast = _route_fast(edges, vertices, fast_path_edges)
     if n_fast is not None:
         return _label_propagation_fast(edges, n_fast, max_iter)
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     if vertices is None:
         vertices = vertices_from_edges(edges)
     sym = _neighbors_with_self(edges, vertices, num_parts)

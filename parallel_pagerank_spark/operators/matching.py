@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.splits import split_bucket
+from ..session import shuffle_partitions
+from .graph import canonical_edges
 
 _ID_BOUND = 2_147_483_648  # 2^31 — packed-key safety bound
 
@@ -52,7 +54,6 @@ def maximal_matching(
     edges: DataFrame,
     max_iter: int = 32,
     salt: int = 0,
-    num_partitions: int | None = None,
 ) -> MatchingResult:
     """Maximal matching over the undirected simple graph of
     ``edges(src, dst)``.
@@ -62,15 +63,9 @@ def maximal_matching(
     match itself).
     """
     spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    u = F.least("src", "dst")
-    v = F.greatest("src", "dst")
+    num_parts = shuffle_partitions(spark)
     active = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(u.alias("u"), v.alias("v"))
-        .distinct()
+        canonical_edges(edges)
         .repartition(num_parts, "u")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

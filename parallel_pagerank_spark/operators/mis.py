@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.splits import split_bucket
+from ..session import shuffle_partitions
+from .graph import symmetrize
 
 
 @dataclass
@@ -50,7 +52,6 @@ def maximal_independent_set(
     edges: DataFrame,
     max_iter: int = 32,
     salt: int = 0,
-    num_partitions: int | None = None,
 ) -> MisResult:
     """MIS over the undirected simple graph of ``edges(src, dst)``.
 
@@ -61,18 +62,9 @@ def maximal_independent_set(
     can union the complement of the edge-endpoint set.
     """
     spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(spark)
     sym = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            ).filter(F.col("src") != F.col("dst"))
-        )
-        .distinct()
+        symmetrize(edges)
         .repartition(num_parts, "src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -42,6 +42,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import shuffle_partitions
+
 # Deterministic register hashes: h_j(v) = (A_j * (v mod P) + B_j) mod P + 1,
 # P = 2^31 - 1 (prime, so low bits are well mixed; values stay in [1, P]
 # and A_j * (P - 1) < 2^63 — no overflow in ANSI mode, and every engine's
@@ -85,7 +87,6 @@ def neighborhood_sketches(
     max_rounds: int = 8,
     num_registers: int = 8,
     directed: bool = True,
-    num_partitions: int | None = None,
 ) -> NeighborhoodResult:
     """FM ball sketches after up to ``max_rounds`` supersteps.
 
@@ -96,10 +97,7 @@ def neighborhood_sketches(
     Ids must be non-negative for oracle parity (Spark pmod vs SQL ``%``
     differ on negatives); the hash itself tolerates any long.
     """
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     regs = [_reg(j) for j in range(num_registers)]
     e = edges.select("src", "dst")
     if not directed:

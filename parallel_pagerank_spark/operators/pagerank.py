@@ -44,6 +44,7 @@ from pyspark.storagelevel import StorageLevel
 from ..config import PageRankConfig
 from ..plans.checkpoint import SuperstepCheckpointer
 from ..plans.iterate import SuperstepState
+from ..session import shuffle_partitions
 from .components import _route_fast
 from .graph import out_degrees, vertices_from_edges
 
@@ -226,9 +227,7 @@ def pagerank(
             return _pagerank_numpy(edges, n_fast, cfg)
 
     spark = edges.sparkSession
-    num_parts = cfg.num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(spark)
     d = cfg.damping
 
     if vertices is None:

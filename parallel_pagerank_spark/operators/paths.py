@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import shuffle_partitions
 from .components import _route_fast
 
 # truncate the (linear) lazy distance-table lineage every k rounds so
@@ -106,7 +107,6 @@ def sssp_distances(
     sources: DataFrame,
     weight_col: str | None = None,
     max_rounds: int = 8,
-    num_partitions: int | None = None,
     fast_path_edges: int = 10_000_000,
 ) -> SsspResult:
     """Minimum path weight from the nearest source within ``max_rounds``
@@ -124,10 +124,7 @@ def sssp_distances(
     under the same bounds/guard/opt-out as the components fast path
     (``SsspResult.mode`` reports which ran).
     """
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     w = (
         F.col(weight_col).cast("double")
         if weight_col is not None

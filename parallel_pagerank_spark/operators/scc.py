@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import shuffle_partitions
 from .components import _route_fast
 from .graph import vertices_from_edges
 
@@ -151,7 +152,6 @@ def strongly_connected_components(
     vertices: DataFrame | None = None,
     max_peel_rounds: int = 16,
     max_iter: int = 200,
-    num_partitions: int | None = None,
     fast_path_edges: int = 10_000_000,
 ) -> SccResult:
     """SCC labeling: ``scc`` = min vertex id in the strongly connected
@@ -163,10 +163,7 @@ def strongly_connected_components(
     n_fast = _route_fast(edges, vertices, fast_path_edges)
     if n_fast is not None:
         return _scc_fast(edges, n_fast, max_iter)
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     if vertices is None:
         vertices = vertices_from_edges(edges)
     active_e = (
@@ -293,7 +290,6 @@ def topological_levels(
     src_col: str = "src_scc",
     dst_col: str = "dst_scc",
     max_iter: int = 64,
-    num_partitions: int | None = None,
 ) -> TopoLevelsResult:
     """Longest-path layering of a DAG (topological levels).
 
@@ -316,10 +312,7 @@ def topological_levels(
     condensation input is acyclic by construction, so False there means
     max_iter was set below the DAG depth.
     """
-    spark = dag_edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(dag_edges.sparkSession)
     e = (
         dag_edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")

@@ -41,6 +41,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import shuffle_partitions
+
 
 @dataclass
 class TrussResult:
@@ -97,7 +99,6 @@ def k_truss(
     edges: DataFrame,
     k: int = 3,
     max_rounds: int = 50,
-    num_partitions: int | None = None,
 ) -> TrussResult:
     """k-truss of the UNDIRECTED simple graph under ``edges(src, dst)``
     (direction and multiplicity are ignored: edges are canonicalized to
@@ -106,10 +107,7 @@ def k_truss(
     graph."""
     if k < 3:
         raise ValueError(f"k must be >= 3 (the {k}-truss is trivial)")
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     s, d = F.col("src"), F.col("dst")
     cur = (
         edges.select(

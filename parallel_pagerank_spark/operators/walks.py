@@ -31,6 +31,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import shuffle_partitions
+
 WALK_MODULUS = 1_000_003  # prime; selector values land in [0, M)
 WALK_A, WALK_B, WALK_C = 31, 17, 7
 
@@ -57,14 +59,10 @@ def deterministic_walks(
     edges: DataFrame,
     sources: DataFrame,
     walk_length: int = 8,
-    num_partitions: int | None = None,
 ) -> WalkResult:
     """One deterministic walk of up to ``walk_length`` hops per distinct
     ``sources.id``, following min-selector hops (module docstring)."""
-    spark = edges.sparkSession
-    num_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_parts = shuffle_partitions(edges.sparkSession)
     e = (
         edges.select("src", "dst")
         .distinct()

@@ -2,6 +2,8 @@
 
 Single place where shuffle parallelism, AQE, and Arrow are configured
 (SURVEY.md §4.3: explicit shuffle-partition tuning is part of the north rule).
+Operators take their partition count only from here, through
+:func:`shuffle_partitions`.
 """
 
 from __future__ import annotations
@@ -50,3 +52,11 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The partition count of every operator's ``repartition(n, key)``:
+    ``spark.sql.shuffle.partitions``, set above from
+    ``EngineConfig.shuffle_partitions``. The key is runtime-settable, so
+    ``spark.conf.set`` changes it for the calls that follow."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -3,6 +3,8 @@ this wave)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -266,16 +268,39 @@ def test_matching_is_maximal_and_valid(spark, match_graph):
             assert s in taken or d in taken
 
 
+@contextmanager
+def _shuffle_partitions(spark, n):
+    """Run the block with ``spark.sql.shuffle.partitions`` = ``n`` — the
+    one source of every operator's partition count."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_matching_deterministic_across_partitioning(spark, match_graph):
     from parallel_pagerank_spark.operators.matching import maximal_matching
 
     a = maximal_matching(edges_df(spark, match_graph))
-    b = maximal_matching(
-        edges_df(spark, match_graph).repartition(13), num_partitions=3
-    )
-    assert {(r.u, r.v) for r in a.pairs.collect()} == {
-        (r.u, r.v) for r in b.pairs.collect()
-    }
+    with _shuffle_partitions(spark, 3):
+        b = maximal_matching(edges_df(spark, match_graph).repartition(13))
+        b_pairs = {(r.u, r.v) for r in b.pairs.collect()}
+    assert {(r.u, r.v) for r in a.pairs.collect()} == b_pairs
+
+
+def test_mis_deterministic_across_partitioning(spark, match_graph):
+    from parallel_pagerank_spark.operators.mis import maximal_independent_set
+
+    a = maximal_independent_set(edges_df(spark, match_graph))
+    with _shuffle_partitions(spark, 3):
+        b = maximal_independent_set(
+            edges_df(spark, match_graph).repartition(7)
+        )
+        b_ids = {r.id for r in b.members.collect()}
+    assert {r.id for r in a.members.collect()} == b_ids
 
 
 def test_matching_rejects_hash_magnitude_ids(spark):
@@ -490,12 +515,10 @@ def test_coloring_deterministic_across_partitioning(spark, match_graph):
     from parallel_pagerank_spark.operators.coloring import greedy_coloring
 
     a = greedy_coloring(edges_df(spark, match_graph))
-    b = greedy_coloring(
-        edges_df(spark, match_graph).repartition(11), num_partitions=3
-    )
-    assert {(r.id, r.color) for r in a.colors.collect()} == {
-        (r.id, r.color) for r in b.colors.collect()
-    }
+    with _shuffle_partitions(spark, 3):
+        b = greedy_coloring(edges_df(spark, match_graph).repartition(11))
+        b_colors = {(r.id, r.color) for r in b.colors.collect()}
+    assert {(r.id, r.color) for r in a.colors.collect()} == b_colors
 
 
 # --- Tool latency ------------------------------------------------------------

@@ -18,7 +18,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 class SuperstepCheckpointer:
@@ -41,26 +41,18 @@ class SuperstepCheckpointer:
 
     def save(
         self,
-        state: DataFrame,
         iteration: int,
         metrics: list[dict],
+        partitions: list[dict],
         converged: bool = False,
     ) -> None:
+        """Record in the manifest the snapshot the caller wrote to
+        ``step_path(iteration)``. ``partitions`` is its per-partition
+        lineage, ``{"partition", "rows"}`` per non-empty partition, counted
+        by the caller in the action that reads the snapshot back."""
         if not self.enabled:
             return
         path = self.step_path(iteration)
-        state.write.mode("overwrite").parquet(path)
-        # per-partition lineage: row count per output partition of the
-        # snapshot, keyed by the physical partition id it came from
-        part_counts = [
-            {"partition": r["pid"], "rows": r["rows"]}
-            for r in state.groupBy(
-                F.spark_partition_id().alias("pid")
-            )
-            .agg(F.count("*").alias("rows"))
-            .orderBy("pid")
-            .collect()
-        ]
         manifest = self._read_manifest()
         manifest = [m for m in manifest if m["iteration"] != iteration]
         manifest.append(
@@ -69,7 +61,7 @@ class SuperstepCheckpointer:
                 "path": path,
                 "converged": converged,
                 "metrics": metrics,
-                "partitions": part_counts,
+                "partitions": partitions,
             }
         )
         manifest.sort(key=lambda m: m["iteration"])

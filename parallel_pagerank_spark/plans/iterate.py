@@ -13,7 +13,9 @@ hash-partitioned on its key, so the join against the edge table
 frame is a bare RDD scan that every join re-Exchanges.
 
 Lineage is truncated every ``truncate_interval`` supersteps by a parquet
-round-trip (with a checkpoint directory, the durable snapshot).
+round-trip (with a checkpoint directory, the durable snapshot). The one
+action that reads the snapshot back also counts its rows per partition,
+the lineage the checkpoint manifest records.
 
 Plan-doubling hazard: a loop whose step references the previous state
 twice (say a gather join plus an update join against the same frame)
@@ -25,17 +27,44 @@ into its own group and one aggregation yields the whole next state. Their
 logical plan grows by a constant number of nodes per superstep
 (tests/test_plan_shape.py pins it).
 
-Why the interval is still 5: a second growth source remains that is not
-in the logical plan. Measured on shuffle-SpMV PageRank, 20k edges, 2k
-vertices, local[4] on a 4-core host, 20 supersteps: interval 5 took
-13.9 s, 8 took 15.8 s, 10 took 27.5 s (the former two-join form at
-interval 5: 25.1 s). Without truncation the superstep's fused action
-takes 0.5-0.75 s up to superstep 6, then 0.8, 1.5, 3.0, 4.1 s at
-supersteps 7-10, while its task count stays constant and each of its
-jobs gains one skipped stage per superstep: the cost is in scheduling,
-not in tasks. It comes with adaptive query execution (4 jobs per
-action): with ``spark.sql.adaptive.enabled=false`` (1 job) the action
-stays at 0.2-0.3 s from superstep 3 through 11.
+Adaptive query execution is off for every query the loop plans and runs
+(``adaptive_off``; the caller's setting is restored when ``run`` returns
+or raises). With AQE on, the cached plan of each persisted superstep
+frame is an ``AdaptiveSparkPlanExec``; once it has run, its explain
+string prints both its final and its initial plan, and both contain the
+scan of the previous superstep's cached frame, whose plan prints both of
+its own. The explain string of a query over the state so doubles every
+superstep between truncations, and Spark builds it at each adaptive plan
+update of every query (``AdaptiveSparkPlanExec.onUpdatePlan`` calls
+``QueryExecution.explainString``); AQE also split each fused action into
+4 jobs. Measured on shuffle-SpMV PageRank, 20k edges, 2k vertices,
+local[4] on a 4-core host, without truncation: the state's plan string
+grew from 28 thousand characters at superstep 1 to 99 million at 12, and
+the superstep from about 1 s up to superstep 6 to 1.6, 2.2, 3.0, 5.8,
+9.6 and 18.5 s at supersteps 7-12. At interval 25 a 4 GB driver heap ran
+out of memory inside that string before the first truncation
+(scripts/superstep_flatness.py, BENCH/superstep_flatness.log). With AQE
+off the cached plans are plain physical plans printed once each (12
+thousand to 282 thousand characters over the same 12 supersteps), each
+superstep takes 0.5-0.9 s from superstep 2 on, and its fused action is
+one Spark job. That job still gains one skipped stage per superstep
+(the scheduler walks the whole RDD lineage), at no measured cost. No
+narrower setting removes the doubling:
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false`` and
+``spark.sql.exchange.reuse=false`` left it as it was. The operators
+persist the edge tables the loop reads inside the same scope: on the same
+graph that took PageRank's from 6 jobs to 2 and CC/LPA's from 5 to 1.
+
+Why the interval is still 5: the logical plan still grows by a constant
+per superstep, the nesting of cached plans with it, and every query plans
+the whole chain. In one 100-superstep run of the same PageRank without
+truncation, supersteps took 0.6-1.0 s up to superstep 50 and 1.1-1.9 s
+from superstep 70 on, and the caller's first query over the returned
+state (planned with AQE on) overflowed the JVM stack in
+``SparkPlanInfo.fromSparkPlan``, which recurses through all 100 nested
+cached plans. The 100 supersteps took 45.4 s at interval 5 and 54.9 s at
+interval 25, one run each on a noisy host: too little to move the
+interval.
 
 Unpersist pitfall: ``DataFrame.unpersist`` only drops the cache entry of
 the receiver's own plan. On a projection of the persisted frame
@@ -49,12 +78,32 @@ from __future__ import annotations
 import shutil
 import tempfile
 import time
-from typing import Callable
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .checkpoint import SuperstepCheckpointer
+
+_ADAPTIVE = "spark.sql.adaptive.enabled"
+
+
+@contextmanager
+def adaptive_off(spark: SparkSession) -> Iterator[None]:
+    """Plan and run the block's queries with adaptive query execution off,
+    then restore the caller's setting, also when the block raises. The
+    setting is read when a query is planned, and ``persist`` plans its
+    cached relation when it is called, so a frame persisted inside the
+    block is planned without AQE even if it is first read later. The
+    setting is the session's: a query another thread plans meanwhile runs
+    without AQE too."""
+    prior = spark.conf.get(_ADAPTIVE)
+    spark.conf.set(_ADAPTIVE, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(_ADAPTIVE, prior)
 
 
 class SuperstepState:
@@ -94,29 +143,32 @@ class SuperstepState:
         that action's row into (metrics record, converged). The next
         state is the frame projected onto the state's columns. Returns
         (state, supersteps, converged, metrics)."""
-        steps, metrics, converged = 0, [], False
-        snap = None
-        if resume and self.ckpt is not None:
-            snap = self.ckpt.load_latest(SparkSession.active())
-        if snap is not None:
-            start, steps, metrics, converged = snap
-            if converged:
-                return start, steps, True, metrics
-        else:
-            start = init()
-        self.df = self._persisted = start.repartition(
-            self.num_partitions, self.key
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        while steps < max_iter and not converged:
-            t0 = time.monotonic()
-            nxt, aggs = step(self.df)
-            nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
-            steps += 1
-            # the ONE action of the superstep; it also materializes ``nxt``
-            record, converged = observe(steps, nxt.agg(*aggs).first())
-            record["wall_ms"] = (time.monotonic() - t0) * 1000.0
-            metrics.append(record)
-            self.advance(nxt, steps, metrics, converged)
+        spark = SparkSession.active()
+        with adaptive_off(spark):
+            steps, metrics, converged = 0, [], False
+            snap = None
+            if resume and self.ckpt is not None:
+                snap = self.ckpt.load_latest(spark)
+            if snap is not None:
+                start, steps, metrics, converged = snap
+                if converged:
+                    return start, steps, True, metrics
+            else:
+                start = init()
+            self.df = self._persisted = start.repartition(
+                self.num_partitions, self.key
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            while steps < max_iter and not converged:
+                t0 = time.monotonic()
+                nxt, aggs = step(self.df)
+                nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
+                steps += 1
+                # the ONE action of the superstep; it also materializes
+                # ``nxt``
+                record, converged = observe(steps, nxt.agg(*aggs).first())
+                record["wall_ms"] = (time.monotonic() - t0) * 1000.0
+                metrics.append(record)
+                self.advance(nxt, steps, metrics, converged)
         return self.df, steps, converged, metrics
 
     def advance(
@@ -134,26 +186,37 @@ class SuperstepState:
         prev = self._persisted
         self._persisted = new_df
         self.df = new_df.select(*self.df.columns)
-        durable = self.ckpt is not None and self.ckpt.enabled
         if converged or iteration % self.interval == 0:
             spark = new_df.sparkSession
+            durable = self.ckpt is not None and self.ckpt.enabled
             if durable:
-                self.ckpt.save(
-                    self.df, iteration, metrics, converged=converged
-                )
                 path = self.ckpt.step_path(iteration)
             else:
                 if self._scratch is None:
                     self._scratch = tempfile.mkdtemp(prefix="superstep_")
                 path = f"{self._scratch}/step_{iteration:06d}"
-                self.df.write.mode("overwrite").parquet(path)
+            self.df.write.mode("overwrite").parquet(path)
             new_df.unpersist()
             self.df = self._persisted = (
                 spark.read.parquet(path)
                 .repartition(self.num_partitions, self.key)
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            self.df.count()
+            # the one action that materializes the re-read state also
+            # counts its rows per partition, the lineage a durable snapshot
+            # records
+            counts = (
+                self.df.groupBy(F.spark_partition_id().alias("partition"))
+                .count()
+                .collect()
+            )
+            if durable:
+                partitions = [
+                    {"partition": p, "rows": n} for p, n in sorted(counts)
+                ]
+                self.ckpt.save(
+                    iteration, metrics, partitions, converged=converged
+                )
             # prune the previous scratch snapshot; keep the live one, which
             # the returned state's cache may refill from
             if self._prev_scratch_path is not None:

@@ -3,7 +3,11 @@
 Single place where shuffle parallelism, AQE, and Arrow are configured
 (SURVEY.md §4.3: explicit shuffle-partition tuning is part of the north rule).
 Operators take their partition count only from here, through
-:func:`shuffle_partitions`.
+:func:`shuffle_partitions`. One override: the keyed superstep loop
+(``SuperstepState.run`` in plans/iterate.py) and the edge tables it reads
+are planned with AQE off (``adaptive_off`` there), which restores the
+session's setting afterwards; every other query runs with
+``EngineConfig.adaptive``.
 """
 
 from __future__ import annotations

@@ -7,6 +7,8 @@ These inspect plan STRUCTURE, not timings — they run fast on tiny data.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -448,3 +450,78 @@ def test_keyed_superstep_plan_grows_linearly(spark, monkeypatch):
         assert len(joins) == 4, name
         step2, step3, step4 = joins[1:]
         assert step3 - step2 == step4 - step3 > 0, (name, joins)
+
+
+def test_superstep_action_is_one_job(spark, monkeypatch):
+    """Each keyed superstep's fused action runs exactly one Spark job: the
+    loop plans its queries with adaptive execution off (with it on, every
+    action ran 4 jobs; plans/iterate.py). The caller's setting of
+    ``spark.sql.adaptive.enabled`` reads the same after the loop returns
+    and after a superstep raises."""
+    from parallel_pagerank_spark.config import PageRankConfig
+    from parallel_pagerank_spark.operators.components import (
+        connected_components,
+    )
+    from parallel_pagerank_spark.operators.labelprop import (
+        label_propagation,
+    )
+    from parallel_pagerank_spark.operators.pagerank import pagerank
+    from parallel_pagerank_spark.plans.iterate import SuperstepState
+
+    sc = spark.sparkContext
+    aqe = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(aqe)
+    path = edges_df(spark, [(i, i + 1) for i in range(12)])
+    groups: list[str] = []
+    real_run = SuperstepState.run
+
+    def tagged_run(self, init, step, observe, *args, **kw):
+        def tagged_step(df):
+            out = step(df)
+            # between here and ``observe`` the loop persists the next frame
+            # (no job) and runs the fused action
+            groups.append(f"superstep-action-{uuid.uuid4().hex}")
+            sc.setJobGroup(groups[-1], "fused superstep action")
+            return out
+
+        def untagged_observe(iteration, row):
+            sc._jsc.clearJobGroup()
+            return observe(iteration, row)
+
+        try:
+            return real_run(
+                self, init, tagged_step, untagged_observe, *args, **kw
+            )
+        finally:
+            sc._jsc.clearJobGroup()
+
+    monkeypatch.setattr(SuperstepState, "run", tagged_run)
+    runs = {
+        # 6 supersteps: one truncation (interval 5) in between
+        "pagerank/shuffle": lambda: pagerank(
+            path,
+            config=PageRankConfig(spmv_mode="shuffle", tol=0.0, max_iter=6),
+        ),
+        "cc": lambda: connected_components(
+            path, max_iter=4, fast_path_edges=0
+        ),
+        "lpa": lambda: label_propagation(path, max_iter=4, fast_path_edges=0),
+    }
+    tracker = sc.statusTracker()
+    for name, run in runs.items():
+        groups.clear()
+        run()
+        jobs = [len(tracker.getJobIdsForGroup(g)) for g in groups]
+        assert jobs and jobs == [1] * len(jobs), (name, jobs)
+        assert spark.conf.get(aqe) == prior, name
+
+    def failing_run(self, init, step, observe, *args, **kw):
+        def boom(df):
+            raise RuntimeError("superstep failed")
+
+        return real_run(self, init, boom, observe, *args, **kw)
+
+    monkeypatch.setattr(SuperstepState, "run", failing_run)
+    with pytest.raises(RuntimeError, match="superstep failed"):
+        connected_components(path, max_iter=2, fast_path_edges=0)
+    assert spark.conf.get(aqe) == prior

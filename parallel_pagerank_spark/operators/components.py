@@ -33,8 +33,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.checkpoint import SuperstepCheckpointer
-from ..plans.iterate import SuperstepState, adaptive_off
-from ..session import shuffle_partitions
+from ..plans.iterate import SuperstepState
+from ..session import adaptive_off, shuffle_partitions
 from .graph import symmetrize, vertices_from_edges
 
 # vectorized fast path bounds: the label array is O(N) driver memory

@@ -91,6 +91,17 @@ def canonical_edges(edges: DataFrame) -> DataFrame:
     )
 
 
+def canonical_degrees(canon: DataFrame) -> DataFrame:
+    """``(id, deg)`` — the undirected simple degree of every vertex of a
+    :func:`canonical_edges` table (vertices without an edge are absent)."""
+    return (
+        canon.select(F.col("u").alias("id"))
+        .unionAll(canon.select(F.col("v").alias("id")))
+        .groupBy("id")
+        .agg(F.count("*").alias("deg"))
+    )
+
+
 def sample_subgraph(
     edges: DataFrame, frac: float, salt: int = 0
 ) -> DataFrame:

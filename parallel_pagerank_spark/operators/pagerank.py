@@ -44,8 +44,8 @@ from pyspark.storagelevel import StorageLevel
 
 from ..config import PageRankConfig
 from ..plans.checkpoint import SuperstepCheckpointer
-from ..plans.iterate import SuperstepState, adaptive_off
-from ..session import shuffle_partitions
+from ..plans.iterate import SuperstepState
+from ..session import adaptive_off, shuffle_partitions
 from .components import _route_fast
 from .graph import out_degrees, vertices_from_edges
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .graph import canonical_degrees, canonical_edges
 from .graph import in_degrees, out_degrees, vertices_from_edges
 
 
@@ -240,15 +241,10 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     coefficient over the undirected simple graph: triangles /
     (deg·(deg−1)/2). Degree-oriented triangle corners joined against
     canonical degrees; vertices with degree < 2 get coefficient 0."""
-    from .graph import canonical_edges
     from .triangles import per_vertex_triangle_counts
 
-    canon = canonical_edges(edges)
-    deg = (
-        canon.select(F.col("u").alias("id"))
-        .unionAll(canon.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("degree"))
+    deg = canonical_degrees(canonical_edges(edges)).withColumnRenamed(
+        "deg", "degree"
     )
     tri = per_vertex_triangle_counts(edges)
     possible = F.col("degree") * (F.col("degree") - 1) / 2.0
@@ -283,12 +279,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     identically in the DuckDB oracle; the final Σ over communities is
     the only cross-engine float-order difference (rounded by the
     caller)."""
-    s, d = F.col("src"), F.col("dst")
-    und = (
-        edges.select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = canonical_edges(edges)
     lab = labels.select("id", "label")
     m_row = und.agg(F.count("*").cast("double").alias("m"))
     la = lab.select(F.col("id").alias("u"), F.col("label").alias("la"))
@@ -299,14 +290,9 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
         .groupBy(F.col("la").alias("label"))
         .agg(F.count("*").cast("double").alias("intra_c"))
     )
-    deg = (
-        und.select(F.col("u").alias("id"))
-        .unionAll(und.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("deg"))
-    )
     degc = (
-        deg.join(lab, "id")
+        canonical_degrees(und)
+        .join(lab, "id")
         .groupBy("label")
         .agg(F.sum("deg").cast("double").alias("deg_c"))
     )

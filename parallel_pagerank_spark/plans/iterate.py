@@ -15,7 +15,11 @@ frame is a bare RDD scan that every join re-Exchanges.
 Lineage is truncated every ``truncate_interval`` supersteps by a parquet
 round-trip (with a checkpoint directory, the durable snapshot). The one
 action that reads the snapshot back also counts its rows per partition,
-the lineage the checkpoint manifest records.
+the lineage the checkpoint manifest records. Without a checkpoint
+directory the snapshot goes to a ``superstep_*`` scratch directory in the
+temp dir; each truncation prunes the one before, and the directory itself
+is removed when the interpreter exits, since the returned state's cache
+may refill from the live snapshot until then.
 
 Plan-doubling hazard: a loop whose step references the previous state
 twice (say a gather join plus an update join against the same frame)
@@ -28,8 +32,8 @@ logical plan grows by a constant number of nodes per superstep
 (tests/test_plan_shape.py pins it).
 
 Adaptive query execution is off for every query the loop plans and runs
-(``adaptive_off``; the caller's setting is restored when ``run`` returns
-or raises). With AQE on, the cached plan of each persisted superstep
+(``session.adaptive_off``; the caller's setting is restored when ``run``
+returns or raises). With AQE on, the cached plan of each persisted superstep
 frame is an ``AdaptiveSparkPlanExec``; once it has run, its explain
 string prints both its final and its initial plan, and both contain the
 scan of the previous superstep's cached frame, whose plan prints both of
@@ -75,35 +79,17 @@ it actually persisted and unpersists that one, a superstep late.
 
 from __future__ import annotations
 
+import atexit
 import shutil
 import tempfile
 import time
-from contextlib import contextmanager
-from typing import Callable, Iterator
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import adaptive_off
 from .checkpoint import SuperstepCheckpointer
-
-_ADAPTIVE = "spark.sql.adaptive.enabled"
-
-
-@contextmanager
-def adaptive_off(spark: SparkSession) -> Iterator[None]:
-    """Plan and run the block's queries with adaptive query execution off,
-    then restore the caller's setting, also when the block raises. The
-    setting is read when a query is planned, and ``persist`` plans its
-    cached relation when it is called, so a frame persisted inside the
-    block is planned without AQE even if it is first read later. The
-    setting is the session's: a query another thread plans meanwhile runs
-    without AQE too."""
-    prior = spark.conf.get(_ADAPTIVE)
-    spark.conf.set(_ADAPTIVE, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(_ADAPTIVE, prior)
 
 
 class SuperstepState:
@@ -194,6 +180,11 @@ class SuperstepState:
             else:
                 if self._scratch is None:
                     self._scratch = tempfile.mkdtemp(prefix="superstep_")
+                    # the returned state's cache may refill from the live
+                    # snapshot for as long as the session runs
+                    atexit.register(
+                        shutil.rmtree, self._scratch, ignore_errors=True
+                    )
                 path = f"{self._scratch}/step_{iteration:06d}"
             self.df.write.mode("overwrite").parquet(path)
             new_df.unpersist()

@@ -3,20 +3,24 @@
 Single place where shuffle parallelism, AQE, and Arrow are configured
 (SURVEY.md §4.3: explicit shuffle-partition tuning is part of the north rule).
 Operators take their partition count only from here, through
-:func:`shuffle_partitions`. One override: the keyed superstep loop
-(``SuperstepState.run`` in plans/iterate.py) and the edge tables it reads
-are planned with AQE off (``adaptive_off`` there), which restores the
-session's setting afterwards; every other query runs with
-``EngineConfig.adaptive``.
+:func:`shuffle_partitions`. One override, :func:`adaptive_off`, which
+restores the session's setting afterwards, scopes two places: the keyed
+superstep loop (``SuperstepState.run`` in plans/iterate.py) plus the edge
+tables it reads, and ``triangle_count`` (operators/triangles.py). Every
+other query runs with ``EngineConfig.adaptive``.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
 from .config import EngineConfig
+
+_ADAPTIVE = "spark.sql.adaptive.enabled"
 
 
 def get_spark(
@@ -39,7 +43,7 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", cfg.max_partition_bytes)
-        .config("spark.sql.adaptive.enabled", str(cfg.adaptive).lower())
+        .config(_ADAPTIVE, str(cfg.adaptive).lower())
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
@@ -64,3 +68,20 @@ def shuffle_partitions(spark: SparkSession) -> int:
     ``EngineConfig.shuffle_partitions``. The key is runtime-settable, so
     ``spark.conf.set`` changes it for the calls that follow."""
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+@contextmanager
+def adaptive_off(spark: SparkSession) -> Iterator[None]:
+    """Plan and run the block's queries with adaptive query execution off,
+    then restore the caller's setting, also when the block raises. The
+    setting is read when a query is planned, and ``persist`` plans its
+    cached relation when it is called, so a frame persisted inside the
+    block is planned without AQE even if it is first read later. The
+    setting is the session's: a query another thread plans meanwhile runs
+    without AQE too."""
+    prior = spark.conf.get(_ADAPTIVE)
+    spark.conf.set(_ADAPTIVE, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(_ADAPTIVE, prior)

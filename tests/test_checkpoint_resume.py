@@ -4,6 +4,10 @@ per-partition lineage + convergence metrics) and source parsing."""
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -157,6 +161,47 @@ def test_superstep_loops_leave_one_cached_state(spark):
         out = run()
         assert cached() - before <= 1, name
         assert out.count() == rows.get(name, 12), name
+
+
+_SCRATCH_CHILD = """
+import glob, os, tempfile
+from parallel_pagerank_spark import EngineConfig, get_spark
+from parallel_pagerank_spark.operators.labelprop import label_propagation
+
+spark = get_spark(master="local[2]", config=EngineConfig(shuffle_partitions=2))
+edges = spark.createDataFrame(
+    [(i, i + 1) for i in range(12)], "src long, dst long"
+)
+res = label_propagation(edges, max_iter=5, fast_path_edges=0)
+res.labels.count()
+print("supersteps", res.supersteps)
+scratch = glob.glob(os.path.join(tempfile.gettempdir(), "superstep_*"))
+print("scratch", len(scratch))
+"""
+
+
+def test_scratch_snapshot_removed_at_exit(tmp_path):
+    """A DataFrame-tier run without a checkpoint dir truncates into a
+    ``superstep_*`` scratch directory in the temp dir (plans/iterate.py).
+    The live snapshot stays while the process runs, since the returned
+    state's cache may refill from it, and is gone once it exits."""
+    root = Path(__file__).resolve().parent.parent
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp_path),
+        PYTHONPATH=os.pathsep.join(
+            filter(None, [str(root), os.environ.get("PYTHONPATH")])
+        ),
+    )
+    env.setdefault("SPARK_DRIVER_MEM", "1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_CHILD],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    # the run truncated (at superstep 5 or at convergence) into scratch
+    assert "scratch 1" in out.stdout.splitlines(), out.stdout
+    assert not list(tmp_path.glob("superstep_*"))
 
 
 def test_edge_list_roundtrip(spark, tmp_path):

@@ -525,3 +525,44 @@ def test_superstep_action_is_one_job(spark, monkeypatch):
     with pytest.raises(RuntimeError, match="superstep failed"):
         connected_components(path, max_iter=2, fast_path_edges=0)
     assert spark.conf.get(aqe) == prior
+
+
+def test_triangle_count_reuses_exchanges(spark):
+    """``triangle_count`` plans its query with adaptive execution off, so
+    the canonical edge set and the degree table, referenced many times by
+    the degree-oriented plan, are each computed once and then read as
+    ``ReusedExchange`` (operators/triangles.py). On this cached input a
+    degree-oriented call runs 5 Spark jobs and an ordered one 3; with AQE
+    on they ran 23 and 7. The caller's ``spark.sql.adaptive.enabled``
+    reads the same after a return and after an unknown ``method``
+    raises."""
+    from parallel_pagerank_spark.operators.triangles import triangle_count
+
+    sc = spark.sparkContext
+    aqe = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(aqe)
+    # K4 on 0-3 plus the triangle 3-4-5, a reversed duplicate, a self-loop
+    # and a pendant edge
+    edges = edges_df(
+        spark,
+        [(0, 1), (1, 2), (2, 0), (0, 3), (1, 3), (2, 3), (3, 4), (4, 5),
+         (5, 3), (1, 0), (2, 2), (5, 6)],
+    ).cache()
+    edges.count()
+    tracker = sc.statusTracker()
+    try:
+        for method, most in (("degree_oriented", 5), ("ordered", 3)):
+            group = f"triangle-count-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "triangle_count")
+            try:
+                assert triangle_count(edges, method) == 5, method
+            finally:
+                sc._jsc.clearJobGroup()
+            jobs = len(tracker.getJobIdsForGroup(group))
+            assert jobs <= most, (method, jobs)
+            assert spark.conf.get(aqe) == prior, method
+        with pytest.raises(ValueError, match="unknown method"):
+            triangle_count(edges, "bogus")
+        assert spark.conf.get(aqe) == prior
+    finally:
+        edges.unpersist()

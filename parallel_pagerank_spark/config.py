@@ -24,7 +24,9 @@ class PageRankConfig:
     tol: float = 1e-6
     max_iter: int = 200
     # resumable-superstep machinery (north rule; no reference counterpart —
-    # the MPI code keeps all state in process memory)
+    # the MPI code keeps all state in process memory): with checkpoint_dir
+    # set, a durable snapshot every checkpoint_interval supersteps and at
+    # convergence; the interval paces nothing else
     checkpoint_interval: int = 5
     checkpoint_dir: str | None = None
     # physical tuning (the partition count is the session's

@@ -11,9 +11,10 @@ label enters its group through the same join and no merge with the
 previous labels is needed. ONE action per superstep (fused changed-count +
 not-yet-converged check), run as one Spark job. The loop is the keyed-state
 superstep driver in plans/iterate.py, shared with PageRank and LPA: it
-plans the loop's queries with adaptive execution off, truncates lineage
-every ``checkpoint_interval`` supersteps, and writes the durable parquet
-checkpoints a run resumes from.
+plans the loop's queries with adaptive execution off, keeps each
+superstep's labels as a local checkpoint (lineage cut every superstep),
+and, with a checkpoint directory, writes the durable parquet snapshots a
+run resumes from.
 
 Scaling note: plain min-label propagation needs O(diameter) supersteps —
 fine for social/web graphs (diameter ~20), slow on path graphs. For
@@ -140,7 +141,11 @@ def connected_components(
     ``resume=True`` continues from the latest durable checkpoint under
     ``checkpoint_dir`` (same manifest contract as PageRank): the label
     snapshot, superstep counter, and per-superstep metrics are restored,
-    and a run that had already converged returns immediately.
+    and a run that had already converged returns immediately. A snapshot
+    is written every ``checkpoint_interval`` supersteps and at
+    convergence; without ``checkpoint_dir`` no files are written, and the
+    labels live only in executor blocks, so losing an executor fails the
+    run (plans/iterate.py).
 
     Small dense-id graphs (E <= fast_path_edges under the default vertex
     rule, no checkpointing) auto-route to the vectorized fast path — the
@@ -162,7 +167,7 @@ def connected_components(
         num_parts,
         "id",
         checkpointer=SuperstepCheckpointer(checkpoint_dir, "components"),
-        truncate_interval=checkpoint_interval,
+        checkpoint_interval=checkpoint_interval,
     )
 
     def step(labels: DataFrame):

@@ -26,13 +26,14 @@ Physical layout (SURVEY.md §4.3):
 - ONE Spark action per superstep: a fused aggregate computing L1, max-error
   (pagerank_mpi.c:201-213) AND the next iteration's dangling sum.
 - the loop itself is the keyed-state superstep driver
-  (``SuperstepState.run`` in plans/iterate.py): ranks stay persisted and
-  hash-partitioned on id, so the SpMV join is zero-shuffle; the driver
-  plans the loop's queries with adaptive execution off, so the fused
-  action runs as one Spark job; and lineage is truncated every
-  ``checkpoint_interval`` supersteps by a parquet round-trip that doubles
-  as the durable resume point when a checkpoint_dir is configured. Why
-  AQE is off there and why the interval stays small is documented there.
+  (``SuperstepState.run`` in plans/iterate.py): each superstep's ranks are
+  a lazy local checkpoint, hash-partitioned on id, so the SpMV join is
+  zero-shuffle and lineage is cut every superstep with no extra job; the
+  driver plans the loop's queries with adaptive execution off, so the
+  fused action runs as one Spark job. With a checkpoint_dir, every
+  ``checkpoint_interval`` supersteps and at convergence it also writes
+  the durable parquet snapshot a run resumes from. Why AQE is off, and
+  what a local checkpoint costs in fault tolerance, is documented there.
 """
 
 from __future__ import annotations
@@ -265,7 +266,7 @@ def pagerank(
         num_parts,
         "id",
         checkpointer=SuperstepCheckpointer(cfg.checkpoint_dir, "pagerank"),
-        truncate_interval=cfg.checkpoint_interval,
+        checkpoint_interval=cfg.checkpoint_interval,
     )
 
     def init() -> DataFrame:
@@ -321,7 +322,7 @@ def pagerank(
         # SpMV gather (pagerank_mpi.c:176-192): join pulls rank[src] to each
         # edge; hash-agg on dst scatter-sums the contributions with map-side
         # partial aggregation. Both sides are pre-partitioned on their join
-        # key (edges hash(src,P) persisted, ranks hash(id,P) persisted) →
+        # key (edges hash(src,P) persisted, ranks hash(id,P) checkpointed) →
         # zero-shuffle join; shuffle_hash avoids SMJ sorts.
         if use_broadcast:
             # zero-shuffle superstep: edges are dst-partitioned and cached;

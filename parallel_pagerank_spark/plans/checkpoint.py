@@ -9,8 +9,10 @@ Layout under ``checkpoint_dir``:
     <name>/manifest.json             — list of superstep records
     <name>/step_<iteration>/         — parquet snapshot of the state DF
 
-Each manifest record carries the iteration number, convergence metrics so
-far, and per-partition row counts (the partition lineage of the snapshot).
+Each manifest record carries the iteration number and per-partition row
+counts (the partition lineage of the snapshot). The newest record, the one
+a resumed run reads, also carries every superstep's convergence metrics so
+far; older records drop theirs, so the manifest grows O(k), not O(k^2).
 """
 
 from __future__ import annotations
@@ -49,7 +51,7 @@ class SuperstepCheckpointer:
         """Record in the manifest the snapshot the caller wrote to
         ``step_path(iteration)``. ``partitions`` is its per-partition
         lineage, ``{"partition", "rows"}`` per non-empty partition, counted
-        by the caller in the action that reads the snapshot back."""
+        by the caller over the state it wrote."""
         if not self.enabled:
             return
         path = self.step_path(iteration)
@@ -65,6 +67,8 @@ class SuperstepCheckpointer:
             }
         )
         manifest.sort(key=lambda m: m["iteration"])
+        for m in manifest[:-1]:
+            m.pop("metrics", None)
         os.makedirs(self.base, exist_ok=True)
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as f:

@@ -4,22 +4,41 @@ Catalyst has no fixpoint operator (SURVEY.md §4.3), so PageRank's
 DataFrame tier, connected components and label propagation each need a
 driver-side loop; ``SuperstepState.run`` is that loop, once. An operator
 supplies only its superstep math; the driver owns resume, the step
-counter, persisting and timing each superstep's one fused action, the
-metrics record, the stop rule, lineage truncation and unpersisting.
+counter, checkpointing and timing each superstep's one fused action, the
+metrics record, the stop rule, lineage truncation and releasing the
+superseded state.
 
-The state is persisted, not ``localCheckpoint``-ed: ``persist`` keeps it
-hash-partitioned on its key, so the join against the edge table
-(partitioned on the same key) is zero-shuffle, while a localCheckpoint-ed
-frame is a bare RDD scan that every join re-Exchanges.
+Every state is a lazy local checkpoint: the starting (or resumed) state
+and each superstep's next frame become ``localCheckpoint(eager=False)``.
+The checkpoint plans the frame at once and caches its partitions on the
+executors when they are first computed; the superstep's one fused action
+computes them, and Spark then cuts the RDD's lineage. Each superstep so
+starts from a plan of constant size (tests/test_plan_shape.py pins the
+join count) with no extra job, and the previous state is released right
+after, by unpersisting the RDD under its ``LogicalRDD``. Releasing logs
+one Spark WARN (the blocks "cannot be recomputed after unpersisting");
+the driver never reads a released state again.
 
-Lineage is truncated every ``truncate_interval`` supersteps by a parquet
-round-trip (with a checkpoint directory, the durable snapshot). The one
-action that reads the snapshot back also counts its rows per partition,
-the lineage the checkpoint manifest records. Without a checkpoint
-directory the snapshot goes to a ``superstep_*`` scratch directory in the
-temp dir; each truncation prunes the one before, and the directory itself
-is removed when the interpreter exits, since the returned state's cache
-may refill from the live snapshot until then.
+The checkpointed scan keeps the output partitioning of the plan it
+replaced (hash on the state's key), so the next superstep's join against
+the edge table, partitioned on the same key, adds no exchange: each
+superstep frame has exactly one live exchange, its gather aggregation.
+That partitioning is taken from the executed plan as it stands (Spark
+4.1.2, ``LogicalRDD.fromDataset``), so it names the executed plan's key
+attribute: it goes stale when the optimizer drops an ``id AS id`` alias,
+or when the join re-instances a checkpoint whose columns an edge table
+shares (an edge table built from the same vertices), and the join then
+re-shuffles the state. A superstep frame's key is a fresh ``dst AS id``;
+the starting state is renamed across its repartition to get one.
+
+Trade-off: local-checkpoint blocks live only on the executors, so losing
+an executor fails the job instead of recomputing the lost state. A run
+that needs fault tolerance sets a checkpoint directory; it then also
+writes the state as a durable parquet snapshot every ``interval``
+supersteps and at convergence, and records it, with the rows per
+partition counted in one action over the in-memory state, in the
+checkpoint manifest a resumed run starts from. Without one, the loop
+writes no files.
 
 Plan-doubling hazard: a loop whose step references the previous state
 twice (say a gather join plus an update join against the same frame)
@@ -27,66 +46,22 @@ DOUBLES its un-truncated logical plan every superstep, so Catalyst
 analysis is O(2^k) between truncations. The keyed loops here reference
 the state once: their edge tables carry one self-row ``(v, v)`` per
 vertex, so the single gather join also brings each vertex's old values
-into its own group and one aggregation yields the whole next state. Their
-logical plan grows by a constant number of nodes per superstep
-(tests/test_plan_shape.py pins it).
+into its own group and one aggregation yields the whole next state.
 
 Adaptive query execution is off for every query the loop plans and runs
 (``session.adaptive_off``; the caller's setting is restored when ``run``
-returns or raises). With AQE on, the cached plan of each persisted superstep
-frame is an ``AdaptiveSparkPlanExec``; once it has run, its explain
-string prints both its final and its initial plan, and both contain the
-scan of the previous superstep's cached frame, whose plan prints both of
-its own. The explain string of a query over the state so doubles every
-superstep between truncations, and Spark builds it at each adaptive plan
-update of every query (``AdaptiveSparkPlanExec.onUpdatePlan`` calls
-``QueryExecution.explainString``); AQE also split each fused action into
-4 jobs. Measured on shuffle-SpMV PageRank, 20k edges, 2k vertices,
-local[4] on a 4-core host, without truncation: the state's plan string
-grew from 28 thousand characters at superstep 1 to 99 million at 12, and
-the superstep from about 1 s up to superstep 6 to 1.6, 2.2, 3.0, 5.8,
-9.6 and 18.5 s at supersteps 7-12. At interval 25 a 4 GB driver heap ran
-out of memory inside that string before the first truncation
-(scripts/superstep_flatness.py, BENCH/superstep_flatness.log). With AQE
-off the cached plans are plain physical plans printed once each (12
-thousand to 282 thousand characters over the same 12 supersteps), each
-superstep takes 0.5-0.9 s from superstep 2 on, and its fused action is
-one Spark job. That job still gains one skipped stage per superstep
-(the scheduler walks the whole RDD lineage), at no measured cost. No
-narrower setting removes the doubling:
-``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false`` and
-``spark.sql.exchange.reuse=false`` left it as it was. The operators
-persist the edge tables the loop reads inside the same scope: on the same
-graph that took PageRank's from 6 jobs to 2 and CC/LPA's from 5 to 1.
-
-Why the interval is still 5: the logical plan still grows by a constant
-per superstep, the nesting of cached plans with it, and every query plans
-the whole chain. In one 100-superstep run of the same PageRank without
-truncation, supersteps took 0.6-1.0 s up to superstep 50 and 1.1-1.9 s
-from superstep 70 on, and the caller's first query over the returned
-state (planned with AQE on) overflowed the JVM stack in
-``SparkPlanInfo.fromSparkPlan``, which recurses through all 100 nested
-cached plans. The 100 supersteps took 45.4 s at interval 5 and 54.9 s at
-interval 25, one run each on a noisy host: too little to move the
-interval.
-
-Unpersist pitfall: ``DataFrame.unpersist`` only drops the cache entry of
-the receiver's own plan. On a projection of the persisted frame
-(``persisted.select(...)``) it silently does nothing and the cached frame
-stays pinned for the session, so the driver keeps a handle on the frame
-it actually persisted and unpersists that one, a superstep late.
+returns or raises): with AQE on, each fused action ran as 4 Spark jobs
+instead of 1. The operators persist the edge tables the loop reads inside
+the same scope: on a 20k-edge graph that took PageRank's from 6 jobs to 2
+and CC/LPA's from 5 to 1.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
 import time
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..session import adaptive_off
 from .checkpoint import SuperstepCheckpointer
@@ -98,18 +73,17 @@ class SuperstepState:
         num_partitions: int,
         key: str,
         checkpointer: SuperstepCheckpointer | None = None,
-        truncate_interval: int = 5,
+        checkpoint_interval: int = 5,
     ):
         self.num_partitions = num_partitions
         self.key = key
         self.ckpt = checkpointer
-        self.interval = truncate_interval
-        self._scratch = None
-        self._prev_scratch_path = None
+        # paces the durable snapshots only; lineage is cut every superstep
+        self.interval = checkpoint_interval
         self.df: DataFrame | None = None
-        # the frame actually persisted for the current state (``df`` may be
-        # a projection of it)
-        self._persisted: DataFrame | None = None
+        # the local checkpoint behind the current state (``df`` may be a
+        # projection of it)
+        self._checkpointed: DataFrame | None = None
 
     def run(
         self,
@@ -141,13 +115,19 @@ class SuperstepState:
                     return start, steps, True, metrics
             else:
                 start = init()
-            self.df = self._persisted = start.repartition(
-                self.num_partitions, self.key
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            # renamed across the repartition, so that the checkpoint's
+            # partitioning names its own key attribute (module docstring)
+            cols = start.columns
+            self.df = self._checkpointed = (
+                start.toDF(*[f"_{c}" for c in cols])
+                .repartition(self.num_partitions, f"_{self.key}")
+                .toDF(*cols)
+                .localCheckpoint(eager=False)
+            )
             while steps < max_iter and not converged:
                 t0 = time.monotonic()
                 nxt, aggs = step(self.df)
-                nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
+                nxt = nxt.localCheckpoint(eager=False)
                 steps += 1
                 # the ONE action of the superstep; it also materializes
                 # ``nxt``
@@ -164,56 +144,29 @@ class SuperstepState:
         metrics: list[dict],
         converged: bool,
     ) -> DataFrame:
-        """Install ``new_df`` (persisted and just materialized by the
-        superstep's action; it may still carry the previous values) as the
-        state, projected onto the state's columns. Truncate lineage every
-        ``interval`` supersteps and at convergence, then unpersist the
-        frame persisted for the previous state."""
-        prev = self._persisted
-        self._persisted = new_df
+        """Install ``new_df`` (the local checkpoint the superstep's action
+        just materialized; it may still carry the previous values) as the
+        state, projected onto the state's columns, and release the previous
+        state's blocks. A durable run also snapshots the state every
+        ``interval`` supersteps and at convergence."""
+        prev = self._checkpointed
+        self._checkpointed = new_df
         self.df = new_df.select(*self.df.columns)
-        if converged or iteration % self.interval == 0:
-            spark = new_df.sparkSession
-            durable = self.ckpt is not None and self.ckpt.enabled
-            if durable:
-                path = self.ckpt.step_path(iteration)
-            else:
-                if self._scratch is None:
-                    self._scratch = tempfile.mkdtemp(prefix="superstep_")
-                    # the returned state's cache may refill from the live
-                    # snapshot for as long as the session runs
-                    atexit.register(
-                        shutil.rmtree, self._scratch, ignore_errors=True
-                    )
-                path = f"{self._scratch}/step_{iteration:06d}"
-            self.df.write.mode("overwrite").parquet(path)
-            new_df.unpersist()
-            self.df = self._persisted = (
-                spark.read.parquet(path)
-                .repartition(self.num_partitions, self.key)
-                .persist(StorageLevel.MEMORY_AND_DISK)
+        durable = self.ckpt is not None and self.ckpt.enabled
+        if durable and (converged or iteration % self.interval == 0):
+            self.df.write.mode("overwrite").parquet(
+                self.ckpt.step_path(iteration)
             )
-            # the one action that materializes the re-read state also
-            # counts its rows per partition, the lineage a durable snapshot
-            # records
             counts = (
                 self.df.groupBy(F.spark_partition_id().alias("partition"))
                 .count()
                 .collect()
             )
-            if durable:
-                partitions = [
-                    {"partition": p, "rows": n} for p, n in sorted(counts)
-                ]
-                self.ckpt.save(
-                    iteration, metrics, partitions, converged=converged
-                )
-            # prune the previous scratch snapshot; keep the live one, which
-            # the returned state's cache may refill from
-            if self._prev_scratch_path is not None:
-                shutil.rmtree(self._prev_scratch_path, ignore_errors=True)
-            if not durable:
-                self._prev_scratch_path = path
-        if prev is not None:
-            prev.unpersist()
+            partitions = [
+                {"partition": p, "rows": n} for p, n in sorted(counts)
+            ]
+            self.ckpt.save(iteration, metrics, partitions, converged=converged)
+        # ``DataFrame.unpersist`` does not reach a checkpoint's blocks:
+        # they belong to the RDD under its ``LogicalRDD``
+        prev._jdf.queryExecution().analyzed().rdd().unpersist(False)
         return self.df

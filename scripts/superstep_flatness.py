@@ -1,17 +1,18 @@
 """Per-superstep wall time of PageRank's DataFrame tier over a long run.
 
-    python scripts/superstep_flatness.py <supersteps> <interval>
+    python scripts/superstep_flatness.py <supersteps>
 
 Runs shuffle-SpMV PageRank (``spmv_mode="shuffle"``, ``tol=0``, so it never
 converges and runs exactly ``<supersteps>`` supersteps) on the graph of the
 benchmark's ``superstep_dist`` workload: 20,000 synthetic edges over an
 explicit table of 2,000 vertices, seed 1 (``synthetic_scaling_edges``).
-Lineage is truncated every ``<interval>`` supersteps; 0 means never. Prints
-one line per superstep with its ``wall_ms`` as ``SuperstepState.run``
-records it (building the step and its one fused action; a truncation that
-follows is not included), the sum of the supersteps, the wall time of the
-whole call (truncations and edge-table preparation included), and then the
-time of the caller's first query over the result, a count.
+No checkpoint directory is set, so every state is a local checkpoint and
+no snapshot is written. Prints one line per superstep with its ``wall_ms``
+as ``SuperstepState.run`` records it (building the step and its one fused
+action; releasing the previous state is not included), the sum of the
+supersteps, the wall time of the whole call (edge-table preparation
+included), and then the time of the caller's first query over the result,
+a count.
 
 Runs at ``local[nproc]`` with nproc shuffle partitions; set
 ``SPARK_DRIVER_MEM`` for the driver heap. Imports the engine from the
@@ -31,12 +32,12 @@ EDGES, VERTICES, SEED = 20_000, 2_000, 1
 
 
 def main(argv: list[str]) -> int:
-    if len(argv) != 2:
+    if len(argv) != 1:
         print(__doc__.strip().splitlines()[2], file=sys.stderr)
         return 2
-    supersteps, interval = int(argv[0]), int(argv[1])
-    if supersteps < 1 or interval < 0:
-        print("supersteps must be >= 1 and interval >= 0", file=sys.stderr)
+    supersteps = int(argv[0])
+    if supersteps < 1:
+        print("supersteps must be >= 1", file=sys.stderr)
         return 2
 
     from parallel_pagerank_spark import EngineConfig, PageRankConfig, get_spark
@@ -58,17 +59,11 @@ def main(argv: list[str]) -> int:
         vertices = spark.range(VERTICES).cache()
         edges.count()
         vertices.count()
-        cfg = PageRankConfig(
-            spmv_mode="shuffle",
-            tol=0.0,
-            max_iter=supersteps,
-            # a run of n supersteps with interval n + 1 never truncates
-            checkpoint_interval=interval or supersteps + 1,
-        )
+        cfg = PageRankConfig(spmv_mode="shuffle", tol=0.0, max_iter=supersteps)
         t0 = time.monotonic()
         res = pagerank(edges, vertices=vertices, config=cfg)
         call_s = time.monotonic() - t0
-        print(f"supersteps={supersteps} interval={interval or 'none'}")
+        print(f"supersteps={supersteps}")
         for rec in res.metrics:
             print(f"superstep {rec['iteration']:4d} wall_ms {rec['wall_ms']:9.1f}")
         steps_s = sum(rec["wall_ms"] for rec in res.metrics) / 1000.0

@@ -117,10 +117,42 @@ def test_components_resume_from_partial_checkpoint(spark, tmp_path):
     assert again.converged and again.supersteps == 12
 
 
-def test_superstep_loops_leave_one_cached_state(spark):
+def test_manifest_keeps_metrics_on_newest_record(spark, tmp_path):
+    """The checkpoint manifest carries the metrics list only on its newest
+    record, the one a resumed run reads, so it grows O(k) over a run
+    rather than O(k^2); resuming still restores every superstep's
+    record."""
+    from parallel_pagerank_spark.operators.components import (
+        connected_components,
+    )
+
+    ck = str(tmp_path / "ck_manifest")
+    df = edges_df(spark, [(i, i + 1) for i in range(11)])  # diameter 11
+    full = connected_components(
+        df, checkpoint_dir=ck, checkpoint_interval=2
+    )
+    assert full.converged and full.supersteps == 12
+    manifest = json.loads(
+        (tmp_path / "ck_manifest/components/manifest.json").read_text()
+    )
+    assert [m["iteration"] for m in manifest] == [2, 4, 6, 8, 10, 12]
+    assert ["metrics" in m for m in manifest] == [False] * 5 + [True]
+    assert manifest[-1]["converged"] is True
+    assert [r["superstep"] for r in manifest[-1]["metrics"]] == list(
+        range(1, 13)
+    )
+    resumed = connected_components(
+        df, checkpoint_dir=ck, checkpoint_interval=2, resume=True
+    )
+    assert resumed.converged and resumed.supersteps == 12
+    assert resumed.metrics == full.metrics
+
+
+def test_superstep_loops_leave_one_cached_state(spark, tmp_path):
     """Each keyed-state superstep loop keeps exactly one cached frame (the
     returned state) once it returns: every superseded superstep's
-    persisted frame is released, truncating or not."""
+    checkpoint is released, also by a run that writes durable
+    snapshots."""
     from parallel_pagerank_spark.operators.components import (
         connected_components,
     )
@@ -137,6 +169,12 @@ def test_superstep_loops_leave_one_cached_state(spark):
     runs = {
         "cc": lambda: connected_components(
             df, fast_path_edges=0, max_iter=4
+        ).components,
+        "cc_durable": lambda: connected_components(
+            df,
+            checkpoint_dir=str(tmp_path / "ck"),
+            checkpoint_interval=2,
+            fast_path_edges=0,
         ).components,
         "lpa": lambda: label_propagation(
             df, fast_path_edges=0, max_iter=5
@@ -181,10 +219,10 @@ print("scratch", len(scratch))
 
 
 def test_scratch_snapshot_removed_at_exit(tmp_path):
-    """A DataFrame-tier run without a checkpoint dir truncates into a
-    ``superstep_*`` scratch directory in the temp dir (plans/iterate.py).
-    The live snapshot stays while the process runs, since the returned
-    state's cache may refill from it, and is gone once it exits."""
+    """A DataFrame-tier run without a checkpoint dir keeps its state in
+    local checkpoints (plans/iterate.py) and writes no snapshot: no
+    ``superstep_*`` scratch directory appears in the temp dir, neither
+    while the process runs nor after it exits."""
     root = Path(__file__).resolve().parent.parent
     env = dict(
         os.environ,
@@ -199,8 +237,7 @@ def test_scratch_snapshot_removed_at_exit(tmp_path):
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    # the run truncated (at superstep 5 or at convergence) into scratch
-    assert "scratch 1" in out.stdout.splitlines(), out.stdout
+    assert "scratch 0" in out.stdout.splitlines(), out.stdout
     assert not list(tmp_path.glob("superstep_*"))
 
 

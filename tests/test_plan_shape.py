@@ -400,12 +400,13 @@ def _logical_joins(df) -> int:
 
 
 def test_keyed_superstep_plan_grows_linearly(spark, monkeypatch):
-    """Each keyed-state superstep references its state in exactly one
-    join, so between truncations the logical plan grows by a constant
-    number of joins per superstep. A second reference to the state (an
-    update join against it) would double the plan every superstep instead
-    (the hazard documented at plans/iterate.py). No run converges or
-    truncates within its 4 supersteps (interval 5)."""
+    """Each keyed-state superstep's state is a local checkpoint, so its
+    logical plan does not grow at all: the join count of the state is the
+    same after every superstep (growth 0). A state that kept its lineage
+    would add the superstep's gather join every superstep, and a second
+    reference to the state (an update join against it) would double the
+    plan (the hazard documented at plans/iterate.py). No run converges
+    within its 4 supersteps."""
     from parallel_pagerank_spark.config import PageRankConfig
     from parallel_pagerank_spark.operators.components import (
         connected_components,
@@ -448,8 +449,62 @@ def test_keyed_superstep_plan_grows_linearly(spark, monkeypatch):
         res = run()
         assert not res.converged, name
         assert len(joins) == 4, name
-        step2, step3, step4 = joins[1:]
-        assert step3 - step2 == step4 - step3 > 0, (name, joins)
+        assert joins == [joins[0]] * 4, (name, joins)
+
+
+def _live_exchanges(df) -> int:
+    """Shuffle exchanges the frame's query runs itself: the plan of a
+    cached relation or a checkpointed scan is not a child of its scan."""
+
+    def walk(node) -> int:
+        kids = node.children()
+        return (node.nodeName() == "Exchange") + sum(
+            walk(kids.apply(i)) for i in range(kids.size())
+        )
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def test_superstep_frames_keep_one_live_exchange(spark, monkeypatch):
+    """Each superstep frame the keyed driver hands to ``localCheckpoint``
+    runs exactly one exchange, its gather aggregation: the checkpointed
+    state keeps the hash partitioning on its key, so the gather join
+    against the edge table (partitioned on the same key) shuffles neither
+    side, the first superstep's join against the starting state included
+    (plans/iterate.py). ``test_spmv_join_is_coparitioned_zero_shuffle``
+    shows the same for hand-persisted frames; this goes through the
+    driver itself."""
+    from parallel_pagerank_spark.config import PageRankConfig
+    from parallel_pagerank_spark.operators.components import (
+        connected_components,
+    )
+    from parallel_pagerank_spark.operators.pagerank import pagerank
+
+    df_cls = type(spark.range(1))
+    real_checkpoint = df_cls.localCheckpoint
+    exchanges: list[int] = []
+
+    def counting_checkpoint(self, *args, **kw):
+        exchanges.append(_live_exchanges(self))
+        return real_checkpoint(self, *args, **kw)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", counting_checkpoint)
+    path = edges_df(spark, [(i, i + 1) for i in range(12)])
+    runs = {
+        "cc": lambda: connected_components(
+            path, max_iter=4, fast_path_edges=0
+        ).supersteps,
+        "pagerank/shuffle": lambda: pagerank(
+            path,
+            config=PageRankConfig(spmv_mode="shuffle", tol=0.0, max_iter=7),
+        ).iterations,
+    }
+    for name, run in runs.items():
+        exchanges.clear()
+        supersteps = run()
+        # the starting state's checkpoint, then one per superstep
+        assert len(exchanges) == supersteps + 1, (name, exchanges)
+        assert exchanges[1:] == [1] * supersteps, (name, exchanges)
 
 
 def test_superstep_action_is_one_job(spark, monkeypatch):

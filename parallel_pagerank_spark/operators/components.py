@@ -26,6 +26,7 @@ min-id labeling.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -105,6 +106,7 @@ def _components_fast(
     steps = 0
     converged = False
     while steps < max_iter:
+        t0 = time.monotonic()
         new = labels.copy()
         # hook: pull the neighbor's label along both directions
         np.minimum.at(new, dst, labels[src])
@@ -114,7 +116,13 @@ def _components_fast(
         new = new[new]
         changed = int((new != labels).sum())
         steps += 1
-        metrics.append({"superstep": steps, "changed": changed})
+        metrics.append(
+            {
+                "superstep": steps,
+                "changed": changed,
+                "wall_ms": (time.monotonic() - t0) * 1000.0,
+            }
+        )
         if changed == 0:
             converged = True
             break

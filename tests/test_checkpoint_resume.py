@@ -26,10 +26,8 @@ from .oracles import SMALL_GRAPH, pagerank_oracle
 def test_checkpoint_manifest_and_resume(spark, tmp_path):
     ck = str(tmp_path / "ck")
     df = edges_df(spark, SMALL_GRAPH)
-    # interval 5, the engine default: between truncations each superstep
-    # plans a logical plan that grows linearly (measured in the
-    # plans/iterate.py docstring), so a longer interval would measure
-    # Catalyst's planning time instead of the checkpoint contract
+    # interval 5, the engine default: a durable snapshot every 5
+    # supersteps and one at convergence (the manifest checked below)
     # tol 1e-4 (reference default, 16 iters vs 26): the checkpoint
     # CONTRACT is under test, not the tolerance — 1e-6 iteration parity
     # is pinned by test_small_graph_golden

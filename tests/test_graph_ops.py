@@ -34,6 +34,7 @@ from .oracles import (
 TWO_COMPONENTS = [(0, 1), (1, 2), (3, 4), (5, 3), (6, 6)]  # id 7 isolated? no: max=6
 RING = [(i, (i + 1) % 10) for i in range(10)]
 STAR = [(0, i) for i in range(1, 20)] + [(i, 0) for i in range(1, 20)]
+K33 = [(i, j) for i in range(3) for j in range(3, 6)]  # tie-heavy bipartite
 
 
 @pytest.mark.parametrize(
@@ -210,6 +211,7 @@ def test_components_fast_path_parity(spark, edges, n):
     res = connected_components(df)  # routes: small dense graph
     assert res.mode == "vectorized"
     assert res.converged
+    assert all(m["wall_ms"] >= 0.0 for m in res.metrics), res.metrics
     got = {r["id"]: r["component"] for r in res.components.collect()}
     assert got == connected_components_oracle(edges, n)
     # same routing from the large-star/small-star entry point
@@ -235,14 +237,44 @@ def test_components_fast_path_honors_max_iter(spark):
 
 
 @pytest.mark.parametrize(
-    "edges,n", [(SMALL_GRAPH, 4), (TWO_COMPONENTS, 7), (STAR, 20)]
+    "edges,n",
+    [(SMALL_GRAPH, 4), (TWO_COMPONENTS, 7), (STAR, 20), (RING, 10), (K33, 6)],
 )
 def test_label_propagation_fast_path_parity(spark, edges, n):
+    """The vectorized tier matches the oracle's labels, and the DataFrame
+    tier's run: superstep count, convergence and the per-superstep
+    ``changed`` counts. Every superstep record carries its wall time."""
     df = edges_df(spark, edges)
     res = label_propagation(df, max_iter=10)  # routes
     assert res.mode == "vectorized"
     got = {r["id"]: r["label"] for r in res.labels.collect()}
     assert got == label_propagation_oracle(edges, n, max_iter=10)
+    slow = label_propagation(df, max_iter=10, fast_path_edges=0)
+    assert slow.mode == "dataframe"
+    assert got == {r["id"]: r["label"] for r in slow.labels.collect()}
+    assert (res.supersteps, res.converged) == (
+        slow.supersteps,
+        slow.converged,
+    )
+    assert [m["changed"] for m in res.metrics] == [
+        m["changed"] for m in slow.metrics
+    ]
+    assert all(m["wall_ms"] >= 0.0 for m in res.metrics), res.metrics
+
+
+@pytest.mark.parametrize("edges,n", [([(0, 0)], 1), ([(2, 2)], 3)])
+def test_label_propagation_fast_path_without_edges(spark, edges, n):
+    """A graph whose only edges are self-loops has no neighbors to count:
+    the vectorized tier keeps every label and converges after one
+    superstep instead of indexing into an empty group list."""
+    df = edges_df(spark, edges)
+    res = label_propagation(df, max_iter=10)
+    assert res.mode == "vectorized"
+    got = {r["id"]: r["label"] for r in res.labels.collect()}
+    assert got == {i: i for i in range(n)}
+    assert got == label_propagation_oracle(edges, n, max_iter=10)
+    assert res.supersteps == 1 and res.converged
+    assert [m["changed"] for m in res.metrics] == [0]
 
 
 def test_k_core(spark):

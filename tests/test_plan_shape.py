@@ -22,50 +22,69 @@ def _plan(df) -> str:
     )
 
 
+def _live_exchanges(df) -> int:
+    """Shuffle exchanges the frame's query runs itself: the plan of a
+    cached relation or a checkpointed scan is not a child of its scan.
+    Plan the frame with adaptive execution off: under AQE the root is an
+    ``AdaptiveSparkPlan`` with no children, and the walk would count 0."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        raise ValueError("planned with AQE on: exchanges are not children")
+
+    def walk(node) -> int:
+        kids = node.children()
+        return (node.nodeName() == "Exchange") + sum(
+            walk(kids.apply(i)) for i in range(kids.size())
+        )
+
+    return walk(root)
+
+
 def test_spmv_join_is_coparitioned_zero_shuffle(spark):
     """The per-superstep gather join must not re-shuffle either side when
     edges and ranks are pre-partitioned on the join key: exactly the one
     intended exchange appears downstream (the gather aggregation, which
     also yields the next state), and none sit between the persisted inputs
-    and the join."""
+    and the join. The frames are planned with adaptive execution off, as
+    the superstep loop plans its own (plans/iterate.py)."""
     from pyspark.storagelevel import StorageLevel
 
-    P = 8
-    edges = (
-        edges_df(spark, SMALL_GRAPH)
-        .withColumn("w", F.lit(1.0))
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges.count()
-    ranks = (
-        spark.range(4)
-        .select("id", F.lit(0.25).alias("rank"))
-        .repartition(P, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ranks.count()
-    joined = edges.join(
-        ranks.hint("shuffle_hash"), edges.src == ranks.id, "inner"
-    )
-    plan = _plan(joined)
-    # co-partitioned persisted inputs → the join itself introduces NO
-    # Exchange. The explain text embeds the cached build lineage (which
-    # contains the ONE-TIME repartition exchanges) under InMemoryRelation,
-    # so only exchanges ABOVE the first InMemoryRelation are live.
-    live = plan.split("InMemoryRelation")[0]
-    assert "Exchange" not in live, plan
-    assert "ShuffledHashJoin" in live, plan
-    assert "BroadcastHashJoin" not in live, plan
+    from parallel_pagerank_spark.session import adaptive_off
 
-    contribs = joined.groupBy("dst").agg(
-        F.sum(F.col("rank") * F.col("w")).alias("contrib")
-    )
-    live2 = _plan(contribs).split("InMemoryRelation")[0]
-    # exactly ONE live exchange: the contribution aggregation...
-    assert live2.count("Exchange") == 1, live2
+    P = 8
+    with adaptive_off(spark):
+        edges = (
+            edges_df(spark, SMALL_GRAPH)
+            .withColumn("w", F.lit(1.0))
+            .repartition(P, "src")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        edges.count()
+        ranks = (
+            spark.range(4)
+            .select("id", F.lit(0.25).alias("rank"))
+            .repartition(P, "id")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        ranks.count()
+        joined = edges.join(
+            ranks.hint("shuffle_hash"), edges.src == ranks.id, "inner"
+        )
+        contribs = joined.groupBy("dst").agg(
+            F.sum(F.col("rank") * F.col("w")).alias("contrib")
+        )
+        # co-partitioned persisted inputs → the join itself introduces NO
+        # Exchange (the one-time repartitions belong to the cached
+        # relations' own plans, which are not children of their scans)
+        assert _live_exchanges(joined) == 0, _plan(joined)
+        # exactly ONE live exchange: the contribution aggregation...
+        assert _live_exchanges(contribs) == 1, _plan(contribs)
+        plan = _plan(contribs)
+    live = plan.split("InMemoryRelation")[0]
+    assert "ShuffledHashJoin" in live, plan
+    assert "BroadcastHashJoin" not in plan, plan
     # ...with map-side partial aggregation (partial + final HashAggregate)
-    assert live2.count("HashAggregate") == 2, live2
+    assert live.count("HashAggregate") == 2, plan
     edges.unpersist()
     ranks.unpersist()
 
@@ -452,19 +471,6 @@ def test_keyed_superstep_plan_grows_linearly(spark, monkeypatch):
         assert joins == [joins[0]] * 4, (name, joins)
 
 
-def _live_exchanges(df) -> int:
-    """Shuffle exchanges the frame's query runs itself: the plan of a
-    cached relation or a checkpointed scan is not a child of its scan."""
-
-    def walk(node) -> int:
-        kids = node.children()
-        return (node.nodeName() == "Exchange") + sum(
-            walk(kids.apply(i)) for i in range(kids.size())
-        )
-
-    return walk(df._jdf.queryExecution().executedPlan())
-
-
 def test_superstep_frames_keep_one_live_exchange(spark, monkeypatch):
     """Each superstep frame the keyed driver hands to ``localCheckpoint``
     runs exactly one exchange, its gather aggregation: the checkpointed
@@ -552,7 +558,8 @@ def test_superstep_action_is_one_job(spark, monkeypatch):
 
     monkeypatch.setattr(SuperstepState, "run", tagged_run)
     runs = {
-        # 6 supersteps: one truncation (interval 5) in between
+        # 6 supersteps, each state a lazy local checkpoint that the
+        # fused action materializes
         "pagerank/shuffle": lambda: pagerank(
             path,
             config=PageRankConfig(spmv_mode="shuffle", tol=0.0, max_iter=6),

@@ -36,7 +36,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..plans.checkpoint import SuperstepCheckpointer
 from ..plans.iterate import SuperstepState
-from ..session import adaptive_off, shuffle_partitions
+from ..session import adaptive_off, frame_from_pandas, shuffle_partitions
 from .graph import symmetrize, vertices_from_edges
 
 # vectorized fast path bounds: the label array is O(N) driver memory
@@ -62,14 +62,17 @@ def _route_fast(
 ) -> int | None:
     """Return N (=max_id+1) if the vectorized fast path applies, else
     None. Applies only under the default dense-id vertex rule with E and N
-    below the in-memory bounds."""
+    below the in-memory bounds. The one-row aggregate runs without AQE:
+    it has nothing to adapt, and AQE would run its partial aggregation and
+    its final row as two jobs instead of one."""
     if vertices is not None or fast_path_edges <= 0:
         return None
-    row = edges.agg(
-        F.greatest(F.max("src"), F.max("dst")).alias("m"),
-        F.least(F.min("src"), F.min("dst")).alias("lo"),
-        F.count("*").alias("e"),
-    ).first()
+    with adaptive_off(edges.sparkSession):
+        row = edges.agg(
+            F.greatest(F.max("src"), F.max("dst")).alias("m"),
+            F.least(F.min("src"), F.min("dst")).alias("lo"),
+            F.count("*").alias("e"),
+        ).first()
     if row["m"] is None:
         return None
     # negative ids would wrap through numpy indexing and silently merge
@@ -127,10 +130,11 @@ def _components_fast(
             converged = True
             break
         labels = new
-    out = spark.createDataFrame(
+    out = frame_from_pandas(
+        spark,
         pd.DataFrame(
             {"id": np.arange(n, dtype=np.int64), "component": labels}
-        )
+        ),
     )
     return ComponentsResult(out, steps, converged, metrics, mode="vectorized")
 

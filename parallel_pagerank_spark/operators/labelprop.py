@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.iterate import SuperstepState
-from ..session import shuffle_partitions
+from ..session import frame_from_pandas, shuffle_partitions
 from .components import (
     _changed_count,
     _neighbors_with_self,
@@ -103,8 +103,9 @@ def _label_propagation_fast(
         labels = new_labels
         if converged:
             break
-    out = spark.createDataFrame(
-        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "label": labels})
+    out = frame_from_pandas(
+        spark,
+        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "label": labels}),
     )
     return LabelPropagationResult(
         out, steps, converged, metrics, mode="vectorized"

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..config import PageRankConfig
+from ..session import frame_from_pandas
 from .pagerank import PageRankResult
 
 
@@ -65,7 +66,7 @@ def _pagerank_numpy(
         if l1 < cfg.tol:
             converged = True
             break
-    ranks = spark.createDataFrame(
-        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "rank": p})
+    ranks = frame_from_pandas(
+        spark, pd.DataFrame({"id": np.arange(n, dtype=np.int64), "rank": p})
     )
     return PageRankResult(ranks, it, converged, metrics, mode="vectorized")

@@ -4,10 +4,13 @@ Single place where shuffle parallelism, AQE, and Arrow are configured
 (SURVEY.md §4.3: explicit shuffle-partition tuning is part of the north rule).
 Operators take their partition count only from here, through
 :func:`shuffle_partitions`. One override, :func:`adaptive_off`, which
-restores the session's setting afterwards, scopes two places: the keyed
+restores the session's setting afterwards, scopes three places: the keyed
 superstep loop (``SuperstepState.run`` in plans/iterate.py) plus the edge
-tables it reads, and ``triangle_count`` (operators/triangles.py). Every
-other query runs with ``EngineConfig.adaptive``.
+tables it reads, ``triangle_count`` (operators/triangles.py), and the
+vectorized tiers' route aggregate (``_route_fast`` in
+operators/components.py). Every other query runs with
+``EngineConfig.adaptive``. The vectorized PageRank, CC and LPA tiers hand
+their numpy results back through :func:`frame_from_pandas`.
 """
 
 from __future__ import annotations
@@ -16,11 +19,13 @@ import os
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
 from .config import EngineConfig
 
 _ADAPTIVE = "spark.sql.adaptive.enabled"
+_ARROW_LOCAL = "spark.sql.execution.arrow.localRelationThreshold"
 
 
 def get_spark(
@@ -85,3 +90,24 @@ def adaptive_off(spark: SparkSession) -> Iterator[None]:
         yield
     finally:
         spark.conf.set(_ADAPTIVE, prior)
+
+
+def frame_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
+    """``spark.createDataFrame(pdf)`` kept as an RDD of the Arrow batches
+    the driver sends (with ``EngineConfig.arrow``, the default), not a
+    ``LocalRelation``. Below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) Spark decodes every batch into rows on the driver and plans
+    the rows as a local relation: a 100,000-row ``(id, label)`` result then
+    took 0.30-0.43 s to create, plan and read back with ``toPandas``,
+    against 0.08-0.14 s as batches (local[4], 4-core host, Spark 4.1.2).
+    The threshold is 0 for this one call and restored afterwards, also
+    when the call raises; another thread's ``createDataFrame`` meanwhile
+    sees it too. The frame has no size statistics: a join planned without
+    AQE never broadcasts it."""
+    prior = spark.conf.get(_ARROW_LOCAL)
+    spark.conf.set(_ARROW_LOCAL, "0")
+    try:
+        return spark.createDataFrame(pdf)
+    finally:
+        spark.conf.set(_ARROW_LOCAL, prior)

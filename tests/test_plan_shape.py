@@ -628,3 +628,49 @@ def test_triangle_count_reuses_exchanges(spark):
         assert spark.conf.get(aqe) == prior
     finally:
         edges.unpersist()
+
+
+def test_vectorized_tiers_hand_back_arrow_batches(spark, monkeypatch):
+    """The vectorized PageRank, CC and LPA tiers hand their numpy results
+    back as an RDD of Arrow batches (``session.frame_from_pandas``), not a
+    ``LocalRelation`` the driver decoded row by row, and their route
+    aggregate runs as one job with AQE off. The session's local-relation
+    threshold and AQE setting read the same afterwards, also when
+    ``createDataFrame`` raises."""
+    from parallel_pagerank_spark.operators.components import (
+        _route_fast,
+        connected_components,
+    )
+    from parallel_pagerank_spark.operators.labelprop import label_propagation
+    from parallel_pagerank_spark.operators.pagerank import pagerank
+    from parallel_pagerank_spark.session import frame_from_pandas
+
+    threshold = "spark.sql.execution.arrow.localRelationThreshold"
+    aqe = "spark.sql.adaptive.enabled"
+    prior = (spark.conf.get(threshold), spark.conf.get(aqe))
+    df = edges_df(spark, SMALL_GRAPH)
+    sc = spark.sparkContext
+    group = f"route-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "route")
+    try:
+        assert _route_fast(df, None, 10) == 4
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    for res, frame in (
+        (pagerank(df), "ranks"),
+        (connected_components(df), "components"),
+        (label_propagation(df, max_iter=10), "labels"),
+    ):
+        assert res.mode == "vectorized", frame
+        plan = getattr(res, frame)._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LogicalRDD", (frame, plan.toString())
+        assert (spark.conf.get(threshold), spark.conf.get(aqe)) == prior
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("createDataFrame failed")
+
+    monkeypatch.setattr(spark, "createDataFrame", fail)
+    with pytest.raises(RuntimeError, match="createDataFrame failed"):
+        frame_from_pandas(spark, None)
+    assert spark.conf.get(threshold) == prior[0]

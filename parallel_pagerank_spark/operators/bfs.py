@@ -10,20 +10,13 @@ value, so a fixed unrolled oracle deeper than the true eccentricity is
 exact).
 
 Superstep shape: one edge⋈frontier join shuffled on dst with a map-side
-partial min; the FRONTIER is eagerly localCheckpoint-ed per round — the
-frontier-state truncation of ``large_star_small_star`` in
-operators/components.py (keyed state goes through plans/iterate.py
-instead). Truncating the frontier is what keeps
-the plan bounded: the anti-join's reference to the previous settled set
-is baked into the flat frontier RDD, so the live ``settled`` chain is a
-plain union of flat frames — LINEAR in rounds (bounded by max_hops) and
-never materialized per round (an eager settled checkpoint would re-write
-the whole O(settled) set every round, O(V·diameter) total; the r3
-verdict's superstep-cost fix removed it). Only the FRONTIER (newly settled
-vertices) is joined each round, so per-round work is O(edges out of the
-frontier), not O(all settled vertices) — at scale this is the
-difference between Θ(diameter · E) and Σ|frontier edges| = E total
-across the whole run.
+partial min, on the frontier driver of plans/iterate.py, which
+checkpoints each round's FRONTIER (newly settled vertices). Only the
+frontier is joined each round, so the whole run does Σ|frontier edges| =
+E work, not Θ(diameter · E); the anti-join's reference to the settled
+set is baked into the flat frontier, so ``settled`` is a plain union of
+flat frames, linear in rounds and never re-written per round (an eager
+settled checkpoint would re-write O(V·diameter) rows in total).
 """
 
 from __future__ import annotations
@@ -35,7 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..session import shuffle_partitions
+from ..plans.iterate import Frontier
+from ..session import frame_from_pandas, shuffle_partitions
 from .components import _route_fast
 
 
@@ -90,8 +84,8 @@ def _bfs_fast(
         if n_frontier == 0:
             converged = True
     reached = dist >= 0
-    spark = edges.sparkSession
-    out = spark.createDataFrame(
+    out = frame_from_pandas(
+        edges.sparkSession,
         pd.DataFrame(
             {
                 "id": np.flatnonzero(reached).astype(np.int64),
@@ -120,44 +114,35 @@ def _frontier_bfs(
         e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     e = e.repartition(num_parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
-    settled = (
-        seeds.withColumn("dist", F.lit(0).cast("long"))
-        .repartition(num_parts, "id")
-        .localCheckpoint(eager=True)
+    loop = Frontier(max_hops)
+    # no slot anywhere: ``settled`` is the union of every frontier, so the
+    # result reads them all
+    settled, n_frontier = loop.checkpoint(
+        seeds.withColumn("dist", F.lit(0).cast("long")).repartition(
+            num_parts, "id"
+        )
     )
-    n_frontier = settled.count()
     frontier = settled
-    metrics: list[dict] = [{"superstep": 0, "frontier": n_frontier}]
-    steps = 0
-    converged = n_frontier == 0
-    while steps < max_hops and n_frontier > 0:
-        steps += 1
+    loop.record(frontier=n_frontier, done=n_frontier == 0)
+    for step in loop.rounds():
         # candidates one hop out of the frontier, minus anything already
-        # settled (anti-join: settled distances are final — monotonicity);
-        # eager localCheckpoint materializes AND truncates lineage
-        nxt = (
+        # settled (anti-join: settled distances are final — monotonicity)
+        frontier, n_frontier = loop.checkpoint(
             e.join(frontier, e.src == frontier.id)
             .select(F.col("dst").alias("id"), *keys[1:])
             .distinct()
             .join(settled, keys, "left_anti")
-            .withColumn("dist", F.lit(steps).cast("long"))
+            .withColumn("dist", F.lit(step).cast("long"))
             .repartition(num_parts, "id")
-            .localCheckpoint(eager=True)
         )
-        n_frontier = nxt.count()
-        # settled is a UNION of flat (checkpointed) frontier frames —
-        # lineage grows linearly in rounds (bounded by max_hops), so it
-        # needs NO per-round materialization of its own: the old eager
-        # checkpoint here re-wrote the entire O(settled) set every round
-        # (O(V · diameter) total writes); the union chain costs nothing
-        # until read (r3 verdict superstep-cost fix)
-        settled = settled.unionByName(nxt)
-        frontier = nxt
-        metrics.append({"superstep": steps, "frontier": n_frontier})
-        if n_frontier == 0:
-            converged = True
+        # a union of flat (checkpointed) frontiers: lineage grows linearly
+        # in rounds (bounded by max_hops) and is never materialized per
+        # round, which would re-write the whole O(settled) set each time
+        settled = settled.unionByName(frontier)
+        loop.record(frontier=n_frontier, done=n_frontier == 0)
     e.unpersist()
-    return settled.select(*keys, "dist"), steps, converged, metrics
+    steps, converged = loop.steps, loop.converged
+    return settled.select(*keys, "dist"), steps, converged, loop.metrics
 
 
 def bfs_distances(
@@ -226,7 +211,7 @@ def landmark_distances(
     src — the frontier carries (id, landmark) so the join fans out each
     edge once per landmark currently expanding through it — a distinct
     on (dst, landmark), an anti-join against the settled pair set, then
-    an eager localCheckpoint: the loop of :func:`bfs_distances`, run by
+    the frontier checkpoint: the loop of :func:`bfs_distances`, run by
     the shared ``_frontier_bfs`` with the landmark as a second key."""
     seeds = (
         landmarks.select("id")

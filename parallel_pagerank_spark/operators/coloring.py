@@ -24,10 +24,9 @@ aggregation finds the frontier; the mex is array-side whole-stage
 codegen — ``array_min(array_except(sequence(0, |S|), S))`` over the
 collect_set of colored-neighbor colors (|S|+1 candidates always
 contain a free color; |S| <= degree, so the array stays
-degree-bounded); two joins retire the frontier. Eager localCheckpoint
-per round truncates lineage (the plans/iterate.py
-plan-doubling hazard — uncolored and colored are each referenced
-twice per round).
+degree-bounded); two joins retire the frontier. The frontier driver of
+plans/iterate.py checkpoints each round (uncolored and colored are each
+read twice per round, that module's plan-doubling hazard).
 """
 
 from __future__ import annotations
@@ -38,6 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.splits import split_bucket
+from ..plans.iterate import Frontier
 from ..session import shuffle_partitions
 from .graph import symmetrize
 
@@ -80,14 +80,11 @@ def greedy_coloring(
         .repartition(num_parts, "id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    uncolored = pri.localCheckpoint(eager=True)
-    n_active = uncolored.count()
+    loop = Frontier(max_iter, key="round")
+    uncolored, n_active = loop.checkpoint(pri, into="uncolored")
     colored = spark.createDataFrame([], "id long, color long")
-    metrics: list[dict] = [{"round": 0, "uncolored": n_active}]
-    rounds = 0
-    converged = n_active == 0
-    while rounds < max_iter and n_active > 0:
-        rounds += 1
+    loop.record(uncolored=n_active, done=n_active == 0)
+    for _ in loop.rounds():
         # frontier: strict (p, id)-min among UNCOLORED neighbors
         live = sym.join(
             uncolored.select(F.col("id").alias("src"),
@@ -116,9 +113,9 @@ def greedy_coloring(
             .groupBy(F.col("src").alias("id"))
             .agg(F.collect_set("color").alias("cs"))
         )
-        newly = (
-            frontier.join(nbr_colors, "id", "left")
-            .select(
+        # no slot: ``colored`` unions every round's newly colored
+        newly, n_new = loop.checkpoint(
+            frontier.join(nbr_colors, "id", "left").select(
                 "id",
                 F.coalesce(
                     F.array_min(
@@ -138,25 +135,18 @@ def greedy_coloring(
                     F.lit(0).cast("long"),
                 ).alias("color"),
             )
-            .localCheckpoint(eager=True)
         )
-        n_new = newly.count()
         colored = colored.unionByName(newly)
-        uncolored = (
+        uncolored, n_active = loop.checkpoint(
             uncolored.join(newly.select("id"), "id", "left_anti")
-            .repartition(num_parts, "id")
-            .localCheckpoint(eager=True)
+            .repartition(num_parts, "id"),
+            into="uncolored",
         )
-        n_active = uncolored.count()
-        metrics.append(
-            {"round": rounds, "uncolored": n_active, "colored": n_new}
-        )
-        if n_active == 0:
-            converged = True
+        loop.record(uncolored=n_active, colored=n_new, done=n_active == 0)
     sym.unpersist()
     pri.unpersist()
-    colors = colored.localCheckpoint(eager=True)
-    n_colors = (
-        colors.agg(F.countDistinct("color")).first()[0] if rounds else 0
+    colors = loop.consolidate(colored)
+    n_colors = colors.agg(F.countDistinct("color")).first()[0]
+    return ColoringResult(
+        colors, loop.steps, loop.converged, n_colors, loop.metrics
     )
-    return ColoringResult(colors, rounds, converged, n_colors, metrics)

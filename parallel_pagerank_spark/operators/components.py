@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.checkpoint import SuperstepCheckpointer
-from ..plans.iterate import SuperstepState
+from ..plans.iterate import Frontier, SuperstepState
 from ..session import adaptive_off, frame_from_pandas, shuffle_partitions
 from .graph import symmetrize, vertices_from_edges
 
@@ -286,22 +286,18 @@ def large_star_small_star(
 
     # state: pairs (hi, lo) with hi > lo meaning "same component"; the
     # initial orientation of every undirected edge is (max, min)
-    pairs = (
+    loop = Frontier(max_iter)
+    pairs, n_pairs = loop.checkpoint(
         edges.filter(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("hi"),
             F.least("src", "dst").alias("lo"),
         )
         .distinct()
-        .repartition(num_parts, "hi")
-        .localCheckpoint(eager=True)
+        .repartition(num_parts, "hi"),
+        into="pairs",
     )
-    n_pairs = pairs.count()
-
-    metrics: list[dict] = []
-    steps = 0
-    converged = False
-    while steps < max_iter:
+    for _ in loop.rounds():
         # large-star: for every node u over its FULL neighborhood, attach
         # each strictly-larger neighbor v to m = min(neighborhood ∪ {u})
         # NO neighborhood arrays anywhere: a 10^8-degree hub must never
@@ -337,38 +333,24 @@ def large_star_small_star(
                 m_of_hi.select(F.col("hi").alias("v"), "m")
             )
         ).select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-        new_pairs = (
+        old = pairs
+        pairs, n_new = loop.checkpoint(
             ss.filter(F.col("hi") != F.col("lo"))
             .distinct()
-            .repartition(num_parts, "hi")
-            .localCheckpoint(eager=True)
+            .repartition(num_parts, "hi"),
+            into="pairs",
         )
-        # converged when the pair set is stable: a star forest rooted at
-        # each component's minimum id. Both sides are DISTINCT sets, so
-        # |new| == |old| plus one empty anti-join (new ⊆ old) proves
-        # equality — the count is nearly free on the just-checkpointed
-        # data and the anti-join probe only runs when the counts agree,
-        # so fixpoint detection costs ONE extra shuffle on the final
-        # round instead of two exceptAll shuffles on every round.
-        n_new = new_pairs.count()
+        # converged when the pair set is stable (a star forest rooted at
+        # each component's min id). Both sides are DISTINCT sets, so equal
+        # counts plus an empty anti-join (new ⊆ old) prove equality: one
+        # extra shuffle on the final round, not two exceptAlls per round.
         diff = 1
         if n_new == n_pairs:
             diff = (
-                new_pairs.join(pairs, ["hi", "lo"], "left_anti")
-                .limit(1)
-                .count()
+                pairs.join(old, ["hi", "lo"], "left_anti").limit(1).count()
             )
-        steps += 1
-        metrics.append(
-            {"superstep": steps, "changed": int(abs(n_new - n_pairs) or diff)}
-        )
-        old = pairs
-        pairs = new_pairs
+        loop.record(changed=int(abs(n_new - n_pairs) or diff), done=diff == 0)
         n_pairs = n_new
-        old.unpersist()
-        if diff == 0:
-            converged = True
-            break
     comp = (
         vertices.join(
             pairs.select(
@@ -382,7 +364,7 @@ def large_star_small_star(
             F.coalesce(F.min("component"), F.min("id")).alias("component")
         )
     )
-    return ComponentsResult(comp, steps, converged, metrics)
+    return ComponentsResult(comp, loop.steps, loop.converged, loop.metrics)
 
 
 def connected_components_incremental(

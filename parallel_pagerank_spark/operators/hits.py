@@ -11,20 +11,15 @@ verbatim by the DuckDB oracle in __spark_entry__._hits_sql).
 
 Scale design: each half-step — the gather sum, its L1 total (a 1-row
 broadcast joined back for the divide) — is one lazy plan whose identical
-shuffle subtrees Spark reuses (ReusedExchange), then eagerly
-localCheckpoint-ed. The checkpoint is NOT optional: _l1_normalized
-references its input twice (data + total), so an un-truncated logical
-plan DOUBLES per half-step and driver-side Catalyst analysis goes
-exponential by iteration ~10 (the same hazard documented at
-plans/iterate.py); truncation pins the per-round plan depth
-constant. Two scheduling barriers per round: a one-barrier variant
-(lazy persisted auth fused into the hub job) was interleaved-A/B
-benched at sf0.1 in r4 and planned WORSE under AQE (10.3 s vs 7.7 s
-warm per 10 rounds) — two small jobs beat one big one here. Vertices
-absent from a half-step's aggregate hold score 0 and contribute nothing
-to the next gather, so the loop carries only sparse non-zero rows; the
-dense vertex set (graph.vertices_from_edges — 0..max_id, csr_graph.c:27
-semantics) is joined back once at the end.
+shuffle subtrees Spark reuses (ReusedExchange), checkpointed by the
+frontier driver of plans/iterate.py (_l1_normalized reads its input
+twice). Two barriers per round: a one-barrier variant (lazy persisted
+auth fused into the hub job) planned WORSE under AQE in an interleaved
+A/B at sf0.1 (10.3 s vs 7.7 s warm per 10 rounds). Vertices absent from
+a half-step's aggregate hold score 0 and contribute nothing to the next
+gather, so the loop carries only sparse non-zero rows; the dense vertex
+set (graph.vertices_from_edges — 0..max_id, csr_graph.c:27 semantics)
+is joined back once at the end.
 """
 
 from __future__ import annotations
@@ -36,7 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..session import shuffle_partitions
+from ..plans.iterate import Frontier
+from ..session import frame_from_pandas, shuffle_partitions
 from .components import _route_fast
 from .graph import vertices_from_edges
 
@@ -63,10 +59,11 @@ def _hits_fast(edges: DataFrame, n: int, max_iter: int) -> HitsResult:
     spark = edges.sparkSession
     ids = np.arange(n, dtype=np.int64)
     if len(src) == 0:
-        out = spark.createDataFrame(
+        out = frame_from_pandas(
+            spark,
             pd.DataFrame(
                 {"id": ids, "hub": np.zeros(n), "authority": np.zeros(n)}
-            )
+            ),
         )
         return HitsResult(out, 0, [], mode="vectorized")
     hub = np.zeros(n)
@@ -80,8 +77,8 @@ def _hits_fast(edges: DataFrame, n: int, max_iter: int) -> HitsResult:
         h_raw = np.bincount(src, weights=auth[dst], minlength=n)
         hub = h_raw / h_raw.sum()
         metrics.append({"iteration": it})
-    out = spark.createDataFrame(
-        pd.DataFrame({"id": ids, "hub": hub, "authority": auth})
+    out = frame_from_pandas(
+        spark, pd.DataFrame({"id": ids, "hub": hub, "authority": auth})
     )
     return HitsResult(out, max_iter, metrics, mode="vectorized")
 
@@ -139,27 +136,23 @@ def hits(
     )
     n_src = srcs.count()
     hub = srcs.withColumn("hub", F.lit(1.0) / F.lit(float(n_src)))
-    auth = None
-    metrics: list[dict] = []
-    for it in range(1, max_iter + 1):
+    loop = Frontier(max_iter, key="iteration")
+    for _ in loop.rounds():
         # authority half-step: gather hub mass along in-edges
         a_raw = e.join(hub, e.src == hub.id).groupBy(
             F.col("dst").alias("id")
         ).agg(F.sum("hub").alias("s"))
-        # eager localCheckpoint per half-step: materializes AND truncates
-        # lineage (see module docstring — without it the plan doubles per
-        # half-step). Measured note (r4): a single-barrier variant (lazy
-        # persisted auth folded into the hub checkpoint job) was BENCHED
-        # against this two-barrier form, interleaved A/B at sf0.1 — the
-        # fused job planned WORSE under AQE (10.3 s vs 7.7 s warm per 10
-        # rounds), so two small jobs beat one big one; kept eager.
-        auth = _l1_normalized(a_raw, "authority").localCheckpoint(eager=True)
+        auth, _ = loop.checkpoint(
+            _l1_normalized(a_raw, "authority"), into="auth", probe=None
+        )
         # hub half-step: gather authority mass along out-edges
         h_raw = e.join(auth, e.dst == auth.id).groupBy(
             F.col("src").alias("id")
         ).agg(F.sum("authority").alias("s"))
-        hub = _l1_normalized(h_raw, "hub").localCheckpoint(eager=True)
-        metrics.append({"iteration": it})
+        hub, _ = loop.checkpoint(
+            _l1_normalized(h_raw, "hub"), into="hub", probe=None
+        )
+        loop.record()
     scores = (
         verts.join(hub, "id", "left")
         .join(auth, "id", "left")
@@ -171,4 +164,4 @@ def hits(
     )
     e.unpersist()
     srcs.unpersist()
-    return HitsResult(scores, max_iter, metrics)
+    return HitsResult(scores, max_iter, loop.metrics)

@@ -12,10 +12,8 @@ Scale design — same skeleton as PageRank's distributed loop
 (the keyed-state superstep driver in plans/iterate.py): the edge set is shuffled ONCE on src
 and persisted; every superstep is one co-partitioned gather join +
 a hash aggregation on dst + a left join back to the dense vertex set,
-then an eager localCheckpoint. The checkpoint is NOT optional: the
-left-join-back references the previous iterate twice (contrib + carry),
-so an un-truncated logical plan DOUBLES per round (the hazard documented
-at plans/iterate.py). Unlike PageRank there is no dangling
+checkpointed by the frontier driver of plans/iterate.py (the join back
+reads the previous iterate twice). Unlike PageRank there is no dangling
 redistribution and no normalization, so a superstep has exactly ONE
 shuffle (the dst aggregation) — the minimum any gather-scatter can do.
 """
@@ -27,6 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.iterate import Frontier
 from ..session import shuffle_partitions
 from .graph import vertices_from_edges
 
@@ -70,23 +69,23 @@ def katz_centrality(
     if n_edges == 0:
         e.unpersist()
         return KatzResult(x, 0, alpha, beta, [])
-    x = x.localCheckpoint(eager=True)
-    metrics: list[dict] = []
+    loop = Frontier(max_iter, key="iteration")
+    x, _ = loop.checkpoint(x, into="katz", probe=None)
     a, b = F.lit(float(alpha)), F.lit(float(beta))
-    for it in range(1, max_iter + 1):
+    for _ in loop.rounds():
         contrib = (
             e.join(x, e.src == x.id)
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("katz").alias("contrib"))
         )
-        x = (
-            verts.join(contrib, "id", "left")
-            .select(
+        x, _ = loop.checkpoint(
+            verts.join(contrib, "id", "left").select(
                 "id",
                 (b + a * F.coalesce("contrib", F.lit(0.0))).alias("katz"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            into="katz",
+            probe=None,
         )
-        metrics.append({"iteration": it})
+        loop.record()
     e.unpersist()
-    return KatzResult(x, max_iter, alpha, beta, metrics)
+    return KatzResult(x, max_iter, alpha, beta, loop.metrics)

@@ -5,13 +5,10 @@ No reference counterpart; standard published definition (Seidman 1983,
 subgraph of the undirected simple graph in which every vertex has degree
 >= k. Computed by synchronously deleting all vertices of degree < k until
 a fixpoint — each superstep is one degree aggregation plus two semi-joins
-(no arrays, no windows), the same persist/truncate superstep skeleton as
-CC/LPA. The per-round eager localCheckpoint is NOT optional: the loop
-references ``cur`` three times per round (directly plus twice through
-``keep``), so an un-truncated logical plan grows ~3^rounds and the
-analyzer's self-join attribute deduplication pins the driver CPU long
-before the job itself is expensive (the plan-doubling hazard documented
-at plans/iterate.py).
+(no arrays, no windows), run on the frontier driver of plans/iterate.py,
+which checkpoints each round's edge set: a round reads ``cur`` three
+times (directly plus twice through ``keep``), the plan-doubling hazard
+of that module.
 
 Returns the surviving vertices with their degree inside the core.
 Vertices outside the core are absent (an empty result means the k-core is
@@ -26,6 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.iterate import Frontier
 from ..session import shuffle_partitions
 from .graph import symmetrize
 
@@ -44,16 +42,11 @@ def k_core(
     max_iter: int = 100,
 ) -> KCoreResult:
     num_parts = shuffle_partitions(edges.sparkSession)
-    cur = (
-        symmetrize(edges)
-        .repartition(num_parts, "src")
-        .localCheckpoint(eager=True)
+    loop = Frontier(max_iter)
+    cur, n_edges = loop.checkpoint(
+        symmetrize(edges).repartition(num_parts, "src"), into="edges"
     )
-    n_edges = cur.count()
-    metrics: list[dict] = []
-    steps = 0
-    converged = False
-    while steps < max_iter:
+    for _ in loop.rounds():
         deg = cur.groupBy("src").agg(F.count("*").alias("deg"))
         # keep feeds BOTH semi-joins below — persist so the degree
         # aggregation runs once per round, not once per join side
@@ -65,30 +58,21 @@ def k_core(
         # delete every vertex below k simultaneously (synchronous round):
         # an edge survives iff BOTH endpoints survive. keep is shrunken
         # per round — semi-joins, never arrays.
-        # eager localCheckpoint materializes AND truncates lineage so the
-        # next round's plan starts from a flat LogicalRDD, not a tree that
-        # triples in depth per round
-        nxt = (
+        cur, n_next = loop.checkpoint(
             cur.join(keep, "src", "left_semi")
             .join(
                 keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
             )
             .select("src", "dst")
-            .repartition(num_parts, "src")
-            .localCheckpoint(eager=True)
+            .repartition(num_parts, "src"),
+            into="edges",
         )
-        n_next = nxt.count()
         keep.unpersist()
-        steps += 1
-        metrics.append(
-            {"superstep": steps, "edges": n_next, "removed": n_edges - n_next}
+        loop.record(
+            edges=n_next, removed=n_edges - n_next, done=n_next == n_edges
         )
-        cur = nxt  # old checkpoint RDDs are released by the ContextCleaner
-        if n_next == n_edges:
-            converged = True
-            break
         n_edges = n_next
     core = cur.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("core_deg")
     )
-    return KCoreResult(core, steps, converged, metrics)
+    return KCoreResult(core, loop.steps, loop.converged, loop.metrics)

@@ -22,10 +22,9 @@ oracle documents); ids at hash magnitude fail fast rather than silently
 alias. At 100 TB scale the round is: one explode of active edges to
 their two endpoints, one min-struct hash aggregation per endpoint
 (map-side partial), one join back, and two anti-joins retiring matched
-endpoints — everything keyed on vertex ids, nothing quadratic; eager
-localCheckpoint per round truncates lineage (the
-plans/iterate.py plan-doubling hazard — the active set is
-referenced three times per round).
+endpoints — everything keyed on vertex ids, nothing quadratic; the
+frontier driver of plans/iterate.py checkpoints each round (the active
+set is read three times per round, that module's plan-doubling hazard).
 """
 
 from __future__ import annotations
@@ -33,9 +32,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.splits import split_bucket
+from ..plans.iterate import Frontier
 from ..session import shuffle_partitions
 from .graph import canonical_edges
 
@@ -64,10 +63,9 @@ def maximal_matching(
     """
     spark = edges.sparkSession
     num_parts = shuffle_partitions(spark)
-    active = (
-        canonical_edges(edges)
-        .repartition(num_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    loop = Frontier(max_iter, key="round")
+    active = loop.cache(
+        canonical_edges(edges).repartition(num_parts, "u"), into="active"
     )
     bad = active.filter(
         (F.col("u") < 0) | (F.col("v") >= F.lit(_ID_BOUND))
@@ -79,17 +77,14 @@ def maximal_matching(
         )
     n_active = active.count()
     matched = spark.createDataFrame([], "u long, v long")
-    metrics: list[dict] = [{"round": 0, "active": n_active, "won": 0}]
-    rounds = 0
-    converged = n_active == 0
-    while rounds < max_iter and n_active > 0:
-        rounds += 1
+    loop.record(active=n_active, won=0, done=n_active == 0)
+    for step in loop.rounds():
         keyed = active.select(
             "u",
             "v",
             split_bucket(
                 F.col("u") * F.lit(_ID_BOUND) + F.col("v"),
-                salt=salt + rounds,
+                salt=salt + step,
             ).alias("p"),
         )
         pri = F.struct("p", "u", "v")
@@ -97,7 +92,8 @@ def maximal_matching(
             F.col("u").alias("ep"), pri.alias("e")
         ).unionByName(keyed.select(F.col("v").alias("ep"), pri.alias("e")))
         mins = inc.groupBy("ep").agg(F.min("e").alias("m"))
-        winners = (
+        # no slot: ``matched`` unions every round's winners
+        winners, n_won = loop.checkpoint(
             keyed.join(
                 mins.select(F.col("ep").alias("u"), F.col("m").alias("mu")),
                 "u",
@@ -108,30 +104,23 @@ def maximal_matching(
             )
             .filter((pri == F.col("mu")) & (pri == F.col("mv")))
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-        n_won = winners.count()
         taken = (
             winners.select(F.col("u").alias("ep"))
             .unionByName(winners.select(F.col("v").alias("ep")))
             .distinct()
         )
-        active = (
+        active, n_active = loop.checkpoint(
             active.join(
                 taken.withColumnRenamed("ep", "u"), "u", "left_anti"
             )
             .join(taken.withColumnRenamed("ep", "v"), "v", "left_anti")
             .select("u", "v")
-            .repartition(num_parts, "u")
-            .localCheckpoint(eager=True)
+            .repartition(num_parts, "u"),
+            into="active",
         )
-        n_active = active.count()
         matched = matched.unionByName(winners)
-        metrics.append(
-            {"round": rounds, "active": n_active, "won": n_won}
-        )
-        if n_active == 0:
-            converged = True
+        loop.record(active=n_active, won=n_won, done=n_active == 0)
     return MatchingResult(
-        matched.localCheckpoint(eager=True), rounds, converged, metrics
+        loop.consolidate(matched), loop.steps, loop.converged, loop.metrics
     )

@@ -23,9 +23,9 @@ ties between equal buckets cannot elect two adjacent vertices.
 
 Superstep shape: one edge ⋈ priorities join shuffled on the edge key +
 a per-vertex min aggregation (map-side partial), then two anti-joins
-retiring winners and their neighbors; eager localCheckpoint per round
-truncates lineage (the plans/iterate.py plan-doubling
-hazard — the active set is referenced twice per round).
+retiring winners and their neighbors, run on the frontier driver of
+plans/iterate.py (the active set is read twice per round, that module's
+plan-doubling hazard).
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.splits import split_bucket
+from ..plans.iterate import Frontier
 from ..session import shuffle_partitions
 from .graph import symmetrize
 
@@ -69,22 +70,19 @@ def maximal_independent_set(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sym.count()
-    active = (
+    loop = Frontier(max_iter, key="round")
+    active, n_active = loop.checkpoint(
         sym.select(F.col("src").alias("id"))
         .distinct()
-        .repartition(num_parts, "id")
-        .localCheckpoint(eager=True)
+        .repartition(num_parts, "id"),
+        into="active",
     )
-    n_active = active.count()
     members = spark.createDataFrame([], "id long")
-    metrics: list[dict] = [{"round": 0, "active": n_active, "won": 0}]
-    rounds = 0
-    converged = n_active == 0
-    while rounds < max_iter and n_active > 0:
-        rounds += 1
+    loop.record(active=n_active, won=0, done=n_active == 0)
+    for step in loop.rounds():
         pri = active.select(
             "id",
-            split_bucket(F.col("id"), salt=salt + rounds).alias("p"),
+            split_bucket(F.col("id"), salt=salt + step).alias("p"),
         )
         # min neighbor priority among ACTIVE neighbors (edges whose both
         # endpoints are still active); (p, id) lexicographic via struct
@@ -97,35 +95,29 @@ def maximal_independent_set(
         nbr_min = live.groupBy(F.col("src").alias("id")).agg(
             F.min(F.struct("p_dst", "dst")).alias("m")
         )
-        winners = (
+        # no slot: ``members`` unions every round's winners
+        winners, n_won = loop.checkpoint(
             pri.join(nbr_min, "id", "left")
             .filter(
                 F.col("m").isNull()
                 | (F.struct(F.col("p"), F.col("id")) < F.col("m"))
             )
             .select("id")
-            .localCheckpoint(eager=True)
         )
-        n_won = winners.count()
         retired_nbrs = (
             sym.join(winners.withColumnRenamed("id", "src"), "src")
             .select(F.col("dst").alias("id"))
             .distinct()
         )
-        active = (
+        active, n_active = loop.checkpoint(
             active.join(winners, "id", "left_anti")
             .join(retired_nbrs, "id", "left_anti")
-            .repartition(num_parts, "id")
-            .localCheckpoint(eager=True)
+            .repartition(num_parts, "id"),
+            into="active",
         )
-        n_active = active.count()
         members = members.unionByName(winners)
-        metrics.append(
-            {"round": rounds, "active": n_active, "won": n_won}
-        )
-        if n_active == 0:
-            converged = True
+        loop.record(active=n_active, won=n_won, done=n_active == 0)
     sym.unpersist()
     return MisResult(
-        members.localCheckpoint(eager=True), rounds, converged, metrics
+        loop.consolidate(members), loop.steps, loop.converged, loop.metrics
     )

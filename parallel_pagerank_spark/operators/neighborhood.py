@@ -23,11 +23,10 @@ BIGINT columns; no arrays, no UDFs, everything whole-stage codegen.
 
 Superstep shape: one edges x sketches join shuffled on dst with a
 map-side partial ``bit_or`` per register, a left join back onto the
-previous state (sinks keep their own sketch), and an eager
-localCheckpoint — the package-wide lineage-truncation discipline
-(operators/bfs.py:12-18). The fixpoint probe is ONE aggregate that the
-loop needs anyway (total set bits is monotone nondecreasing under OR, so
-"unchanged total" == "no sketch changed"), not an exceptAll pass.
+previous state (sinks keep their own sketch), checkpointed by the
+frontier driver of plans/iterate.py. The fixpoint probe is ONE aggregate
+(total set bits is monotone nondecreasing under OR, so "unchanged total"
+== "no sketch changed"), not an exceptAll pass.
 
 At 100 TB scale this is THE way to get distance structure: per round one
 edge-sized shuffle + one vertex-sized state, R*8 bytes of state per
@@ -42,6 +41,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.iterate import Frontier
 from ..session import shuffle_partitions
 
 # Deterministic register hashes: h_j(v) = (A_j * (v mod P) + B_j) mod P + 1,
@@ -116,30 +116,28 @@ def neighborhood_sketches(
         .distinct()
     )
     h = [_register_hash(F.col("id"), j) for j in range(num_registers)]
-    state = (
+    loop = Frontier(max_rounds)
+    bits = _bit_total(regs)
+    state, total_bits = loop.checkpoint(
         verts.select(
             "id",
             *[
                 h[j].bitwiseAND(-h[j]).alias(regs[j])
                 for j in range(num_registers)
             ],
-        )
-        .repartition(num_parts, "id")
-        .localCheckpoint(eager=True)
+        ).repartition(num_parts, "id"),
+        into="state",
+        probe=bits,
     )
-    total_bits = _bit_total(state, regs)
-    growth = [{"superstep": 0, "total_bits": total_bits}]
-    steps = 0
-    converged = False
-    while steps < max_rounds:
-        steps += 1
+    loop.record(total_bits=total_bits)
+    for _ in loop.rounds():
         gathered = (
             e.join(state, e.dst == state.id)
             .groupBy("src")
             .agg(*[F.bit_or(regs[j]).alias(f"g{j}") for j in range(num_registers)])
             .withColumnRenamed("src", "id")
         )
-        state = (
+        state, new_total = loop.checkpoint(
             state.join(gathered, "id", "left")
             .select(
                 "id",
@@ -150,25 +148,20 @@ def neighborhood_sketches(
                     for j in range(num_registers)
                 ],
             )
-            .repartition(num_parts, "id")
-            .localCheckpoint(eager=True)
+            .repartition(num_parts, "id"),
+            into="state",
+            probe=bits,
         )
-        new_total = _bit_total(state, regs)
-        growth.append({"superstep": steps, "total_bits": new_total})
-        if new_total == total_bits:
-            converged = True
-            break
+        loop.record(total_bits=new_total, done=new_total == total_bits)
         total_bits = new_total
     e.unpersist()
-    return NeighborhoodResult(state, steps, converged, growth)
+    return NeighborhoodResult(state, loop.steps, loop.converged, loop.metrics)
 
 
-def _bit_total(state: DataFrame, regs: list[str]) -> int:
-    total = None
-    for r in regs:
-        term = F.sum(F.bit_count(F.col(r)))
-        total = term if total is None else total + term
-    return int(state.agg(total.alias("b")).first()["b"] or 0)
+def _bit_total(regs: list[str]):
+    """Probe: the total set bits over a sketch frame's registers."""
+    total = sum(F.sum(F.bit_count(F.col(r))) for r in regs)
+    return lambda state: int(state.agg(total).first()[0] or 0)
 
 
 def ball_size_estimates(sketches: DataFrame) -> DataFrame:

@@ -7,16 +7,12 @@ rounds every vertex holds the minimum weight over paths of at most k
 edges from the nearest source — the bounded-hop generalization of
 operators/bfs.py from hop counts to additive edge weights.
 
-Superstep shape mirrors bfs.py: only the FRONTIER (vertices whose
-distance improved last round) is joined against the edge table and
-eagerly localCheckpoint-ed, so per-round work is O(edges out of the
-frontier); the distance table is updated by anti-join ∪ improved rows
-(no full re-aggregation of settled state) and kept LAZY + persisted —
-because the improved frame is flat, each update references the previous
-distance table exactly once (linear lineage, truncated every
-_TRUNCATE_EVERY rounds), avoiding both the doubling hazard documented
-at plans/iterate.py and the old per-round eager checkpoint's
-full O(V) re-write (r3 verdict superstep-cost fix).
+Superstep shape mirrors bfs.py, on the same frontier driver
+(plans/iterate.py): only the FRONTIER (vertices whose distance improved
+last round) is joined and checkpointed; the distance table is updated by
+anti-join ∪ improved rows and kept LAZY + cached. The improved frame is
+flat, so each update reads the previous table once: linear lineage, cut
+every _TRUNCATE_EVERY rounds, with no per-round O(V) re-write.
 With integer-valued double weights every sum and min is exact
 in IEEE double (up to 2^53), so a fixed-round run is hash-comparable
 against an unrolled dense-relaxation SQL oracle — the frontier
@@ -33,12 +29,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..session import shuffle_partitions
+from ..plans.iterate import Frontier
+from ..session import frame_from_pandas, shuffle_partitions
 from .components import _route_fast
 
-# truncate the (linear) lazy distance-table lineage every k rounds so
-# deep max_rounds runs keep a bounded plan; in between, persist() avoids
-# the eager checkpoint's full O(V) re-write per round
+# rounds between checkpoints of the lazily cached distance table
 _TRUNCATE_EVERY = 8
 
 
@@ -90,14 +85,14 @@ def _sssp_fast(
         if n_frontier == 0:
             converged = True
     reached = np.isfinite(dist)
-    spark = sources.sparkSession
-    out = spark.createDataFrame(
+    out = frame_from_pandas(
+        sources.sparkSession,
         pd.DataFrame(
             {
                 "id": np.flatnonzero(reached).astype(np.int64),
                 "dist": dist[reached],
             }
-        )
+        ),
     )
     return SsspResult(out, steps, converged, metrics, mode="vectorized")
 
@@ -153,23 +148,19 @@ def sssp_distances(
             )
     else:
         e.count()
-    dist = (
+    loop = Frontier(max_rounds)
+    # no slot for the checkpoints: the lazy distance chain reads them all
+    dist, n_frontier = loop.checkpoint(
         sources.select("id")
         .distinct()
         .withColumn("dist", F.lit(0.0))
         .repartition(num_parts, "id")
-        .localCheckpoint(eager=True)
     )
-    n_frontier = dist.count()
     frontier = dist
-    metrics: list[dict] = [{"superstep": 0, "improved": n_frontier}]
-    steps = 0
-    converged = n_frontier == 0
-    stale_cache: DataFrame | None = None
-    while steps < max_rounds and n_frontier > 0:
-        steps += 1
+    loop.record(improved=n_frontier, done=n_frontier == 0)
+    for step in loop.rounds():
         # best candidate distance through the frontier, map-side partial
-        # min; eager localCheckpoint materializes AND truncates lineage
+        # min
         cand = (
             e.join(frontier, e.src == frontier.id)
             .select(
@@ -179,39 +170,23 @@ def sssp_distances(
             .groupBy("id")
             .agg(F.min("cand").alias("cand"))
         )
-        improved = (
+        frontier, n_frontier = loop.checkpoint(
             cand.join(dist, "id", "left")
             .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
             .select("id", F.col("cand").alias("dist"))
             .repartition(num_parts, "id")
-            .localCheckpoint(eager=True)
         )
-        n_frontier = improved.count()
-        # the count above (whose plan left-joins dist) is what first
-        # materializes LAST round's persisted dist — only now is the
-        # round-before-last cache safely stale
-        if stale_cache is not None:
-            stale_cache.unpersist()
-            stale_cache = None
+        loop.record(improved=n_frontier, done=n_frontier == 0)
         if n_frontier == 0:
-            converged = True
-            metrics.append({"superstep": steps, "improved": 0})
-            break
-        # the distance table update stays LAZY: ``improved`` is flat
-        # (checkpointed), so dist_k references dist_{k-1} exactly once —
-        # linear lineage, not the doubling case. persist() caches it for
-        # its two readers (next round's left join + anti-join) without
-        # the eager checkpoint's full O(V) re-write per round (r3 verdict
-        # superstep-cost fix); a localCheckpoint every ``_TRUNCATE_EVERY``
-        # rounds truncates the chain for deep max_rounds.
-        if dist.is_cached:
-            stale_cache = dist
-        dist = dist.join(improved, "id", "left_anti").unionByName(improved)
-        if steps % _TRUNCATE_EVERY == 0:
-            dist = dist.localCheckpoint(eager=True)
+            continue
+        # lazy: cached for its two readers, next round's left join and
+        # anti-join (module docstring)
+        dist = dist.join(frontier, "id", "left_anti").unionByName(frontier)
+        if step % _TRUNCATE_EVERY == 0:
+            dist, _ = loop.checkpoint(dist, probe=None)
         else:
-            dist = dist.persist(StorageLevel.MEMORY_AND_DISK)
-        frontier = improved
-        metrics.append({"superstep": steps, "improved": n_frontier})
+            dist = loop.cache(dist, into="dist")
     e.unpersist()
-    return SsspResult(dist.select("id", "dist"), steps, converged, metrics)
+    return SsspResult(
+        dist.select("id", "dist"), loop.steps, loop.converged, loop.metrics
+    )

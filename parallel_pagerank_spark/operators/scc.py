@@ -22,8 +22,9 @@ vertex "wins" both label races settles in parallel).
 
 Scale shape: each F/B computation is the same synchronous min-label
 superstep as connected components (edge ⋈ labels shuffled on the join
-key, map-side partial min, eager localCheckpoint lineage truncation per
-superstep — the plans/iterate.py plan-doubling hazard).
+key, map-side partial min), and the races, the peel and
+:func:`topological_levels` run on the frontier driver of
+plans/iterate.py, which checkpoints every round's frames.
 Directed propagation has no pointer-jumping shortcut, so supersteps per
 fixpoint are O(longest shortest path inside the active subgraph); the
 ``max_iter`` bound caps runaway chains and is reported via
@@ -41,7 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..session import shuffle_partitions
+from ..plans.iterate import Frontier
+from ..session import frame_from_pandas, shuffle_partitions
 from .components import _route_fast
 from .graph import vertices_from_edges
 
@@ -60,19 +62,22 @@ def _min_label_fixpoint_df(
     labels: DataFrame,
     num_parts: int,
     max_iter: int,
-) -> tuple[DataFrame, int, bool]:
+) -> tuple[DataFrame, Frontier]:
     """Directed min-label propagation to fixpoint: label(v) <-
     min(label(v), min over in-edges (u, v) of label(u)). ``edges`` must
-    already be persisted/partitioned by the caller."""
-    cur = labels.repartition(num_parts, "id").localCheckpoint(eager=True)
-    steps = 0
-    while steps < max_iter:
+    already be persisted/partitioned by the caller. Returns the labels
+    and the loop, whose ``close`` releases them once read."""
+    loop = Frontier(max_iter)
+    cur, _ = loop.checkpoint(
+        labels.repartition(num_parts, "id"), into="labels", probe=None
+    )
+    for _ in loop.rounds():
         neigh = (
             edges.join(cur.hint("shuffle_hash"), edges.src == cur.id)
             .groupBy("dst")
             .agg(F.min("label").alias("nl"))
         )
-        nxt = (
+        nxt, changed = loop.checkpoint(
             cur.select("id", F.col("label").alias("old"))
             .join(neigh.hint("shuffle_hash"), F.col("id") == neigh.dst, "left")
             .select(
@@ -80,20 +85,15 @@ def _min_label_fixpoint_df(
                 F.col("old"),
                 F.least(F.col("old"), F.col("nl")).alias("label"),
             )
-            .repartition(num_parts, "id")
-            .localCheckpoint(eager=True)
+            .repartition(num_parts, "id"),
+            into="labels",
+            probe=lambda df: df.agg(
+                F.sum((F.col("label") != F.col("old")).cast("long"))
+            ).first()[0],
         )
-        changed = (
-            nxt.agg(
-                F.sum((F.col("label") != F.col("old")).cast("long")).alias("c")
-            ).first()["c"]
-            or 0
-        )
-        steps += 1
         cur = nxt.select("id", "label")
-        if changed == 0:
-            return cur, steps, True
-    return cur, steps, False
+        loop.record(done=not changed)
+    return cur, loop
 
 
 def _scc_fast(edges: DataFrame, n: int, max_iter: int) -> SccResult:
@@ -140,9 +140,9 @@ def _scc_fast(edges: DataFrame, n: int, max_iter: int) -> SccResult:
         src, dst = src[keep], dst[keep]
     # vertices never touched by an edge are their own singleton SCC
     scc[scc < 0] = np.flatnonzero(scc < 0)
-    spark = edges.sparkSession
-    out = spark.createDataFrame(
-        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "scc": scc})
+    out = frame_from_pandas(
+        edges.sparkSession,
+        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "scc": scc}),
     )
     return SccResult(out, rounds, converged, metrics, mode="vectorized")
 
@@ -172,49 +172,52 @@ def strongly_connected_components(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     active_e.count()
-    active_v = vertices.select("id").localCheckpoint(eager=True)
-    rev = active_e.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
+    peel = Frontier(max_peel_rounds, key="round")
+    active_v, _ = peel.checkpoint(
+        vertices.select("id"), into="active", probe=None
     )
+    n_active = None
+    # settled parts have no slot: the result is their union
     done_parts: list[DataFrame] = []
-    metrics: list[dict] = []
-    rounds = 0
-    converged = False
-    while rounds < max_peel_rounds:
-        rounds += 1
+    for _ in peel.rounds():
+        rev = active_e.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst")
+        )
         init = active_v.select("id", F.col("id").alias("label"))
-        fwd, s_f, ok_f = _min_label_fixpoint_df(
+        fwd, fwd_loop = _min_label_fixpoint_df(
             active_e, init, num_parts, max_iter
         )
-        bwd, s_b, ok_b = _min_label_fixpoint_df(
+        bwd, bwd_loop = _min_label_fixpoint_df(
             rev, init, num_parts, max_iter
         )
         both = fwd.select("id", F.col("label").alias("f")).join(
             bwd.select("id", F.col("label").alias("b")), "id"
         )
-        settled = (
-            both.filter(F.col("f") == F.col("b"))
-            .select("id", F.col("f").alias("scc"))
-            .localCheckpoint(eager=True)
+        settled, n_settled = peel.checkpoint(
+            both.filter(F.col("f") == F.col("b")).select(
+                "id", F.col("f").alias("scc")
+            )
         )
-        n_settled = settled.count()
-        metrics.append(
-            {
-                "round": rounds,
-                "settled": n_settled,
-                "fwd_supersteps": s_f,
-                "bwd_supersteps": s_b,
-            }
+        fwd_loop.close()
+        bwd_loop.close()
+        # truncated races that settled nothing: bounded give-up
+        gave_up = n_settled == 0 and not (
+            fwd_loop.converged and bwd_loop.converged
         )
-        if n_settled == 0 and not (ok_f and ok_b):
-            break  # truncated races settled nothing: bounded give-up
-        done_parts.append(settled)
-        active_v = active_v.join(
-            settled, "id", "left_anti"
-        ).localCheckpoint(eager=True)
-        if active_v.count() == 0:
-            converged = True
-            break
+        if not gave_up:
+            done_parts.append(settled)
+            active_v, n_active = peel.checkpoint(
+                active_v.join(settled, "id", "left_anti"), into="active"
+            )
+        done = gave_up or n_active == 0
+        peel.record(
+            settled=n_settled,
+            fwd_supersteps=fwd_loop.steps,
+            bwd_supersteps=bwd_loop.steps,
+            done=done,
+        )
+        if done:
+            continue
         old_e = active_e
         active_e = (
             active_e.join(
@@ -229,9 +232,7 @@ def strongly_connected_components(
         )
         active_e.count()
         old_e.unpersist()
-        rev = active_e.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
+    converged = n_active == 0
     active_e.unpersist()
     out = done_parts[0] if done_parts else None
     for part in done_parts[1:]:
@@ -244,7 +245,7 @@ def strongly_connected_components(
         out = out.unionByName(
             active_v.select("id", F.col("id").alias("scc"))
         )
-    return SccResult(out, rounds, converged, metrics)
+    return SccResult(out, peel.steps, converged, peel.metrics)
 
 
 def condensation_edges(edges: DataFrame, scc: DataFrame) -> DataFrame:
@@ -305,12 +306,12 @@ def topological_levels(
     total work across the run is O(depth-bounded relaxations), not
     O(rounds · E); fixpoint in exactly depth(DAG) rounds (monotone — a
     settled longest path never shrinks). Each round's merged state is
-    eagerly localCheckpoint-truncated (the plans/iterate.py
-    plan-doubling hazard: the merge reads the previous level table
-    twice). A cycle makes levels grow forever; the ``max_iter`` bound
-    converts that into converged=False instead of a hang — the
-    condensation input is acyclic by construction, so False there means
-    max_iter was set below the DAG depth.
+    checkpointed by the frontier driver (plans/iterate.py: the merge
+    reads the previous level table twice). A cycle makes levels grow
+    forever; the ``max_iter`` bound converts that into converged=False
+    instead of a hang — the condensation input is acyclic by
+    construction, so False there means max_iter was set below the DAG
+    depth.
     """
     num_parts = shuffle_partitions(dag_edges.sparkSession)
     e = (
@@ -327,47 +328,44 @@ def topological_levels(
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    levels = (
-        nodes.withColumn("level", F.lit(0).cast("long"))
-        .repartition(num_parts, "id")
-        .localCheckpoint(eager=True)
+    loop = Frontier(max_iter, key="round")
+    levels, n_changed = loop.checkpoint(
+        nodes.withColumn("level", F.lit(0).cast("long")).repartition(
+            num_parts, "id"
+        ),
+        into="levels",
     )
     changed = levels
-    n_changed = changed.count()
-    metrics: list[dict] = [{"round": 0, "changed": n_changed}]
-    rounds = 0
-    converged = n_changed == 0
-    while rounds < max_iter and n_changed > 0:
-        rounds += 1
+    loop.record(changed=n_changed, done=n_changed == 0)
+    grew = F.col("cand") > F.col("level")
+    for _ in loop.rounds():
         cand = (
             e.join(changed, e.src == changed.id)
             .groupBy(F.col("dst").alias("id"))
             .agg((F.max("level") + F.lit(1)).alias("cand"))
         )
-        merged = (
+        merged, n_changed = loop.checkpoint(
             levels.join(cand, "id", "left")
             .select(
                 "id",
                 "level",
                 F.coalesce(F.col("cand"), F.lit(-1)).alias("cand"),
             )
-            .repartition(num_parts, "id")
-            .localCheckpoint(eager=True)
+            .repartition(num_parts, "id"),
+            into="levels",
+            probe=lambda df: df.filter(grew).count(),
         )
-        changed = merged.filter(F.col("cand") > F.col("level")).select(
+        changed = merged.filter(grew).select(
             "id", F.col("cand").alias("level")
         )
-        n_changed = changed.count()
         levels = merged.select(
             "id",
             F.greatest(F.col("level"), F.col("cand")).alias("level"),
         )
-        metrics.append({"round": rounds, "changed": n_changed})
-        if n_changed == 0:
-            converged = True
+        loop.record(changed=n_changed, done=n_changed == 0)
     e.unpersist()
     return TopoLevelsResult(
-        levels.select("id", "level"), rounds, converged, metrics
+        levels.select("id", "level"), loop.steps, loop.converged, loop.metrics
     )
 
 

@@ -23,11 +23,11 @@ full wedge enumeration), deduped per triangle so a triangle losing two
 edges in one round still decrements its surviving side exactly once.
 Support is then maintained by subtraction — an anti-join removes D, a
 left join applies the decrements. All joins are keyed on edge
-endpoints; the per-round state (edge set + support) is materialized
-AND lineage-truncated with an eager localCheckpoint (the loop
-references it five times — three triangle sides, the anti-join, and
-the decrement join — so an un-truncated plan grows geometrically; the
-plan-doubling hazard documented at plans/iterate.py).
+endpoints; the per-round state (edge set + support) is checkpointed by
+the frontier driver of plans/iterate.py (the loop references it five
+times — three triangle sides, the anti-join, and the decrement join —
+the plan-doubling hazard of that module), and one action per round
+counts both the surviving edges and the next round's drops.
 For hub-skewed graphs the initial wedge join is the classic candidate
 for degree orientation (enumerate from the lower-degree endpoint,
 triangles.py:34 does this for counting); the ordered a<b<c form used
@@ -41,6 +41,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.iterate import Frontier
 from ..session import shuffle_partitions
 
 
@@ -109,41 +110,36 @@ def k_truss(
         raise ValueError(f"k must be >= 3 (the {k}-truss is trivial)")
     num_parts = shuffle_partitions(edges.sparkSession)
     s, d = F.col("src"), F.col("dst")
-    cur = (
-        edges.select(
-            F.least(s, d).alias("u"), F.greatest(s, d).alias("v")
-        )
+    thresh = k - 2
+    drops = F.col("support") < thresh
+
+    def edges_and_drops(df: DataFrame) -> tuple[int, int]:
+        row = df.agg(F.count("*"), F.sum(drops.cast("long"))).first()
+        return row[0], row[1] or 0
+
+    loop = Frontier(max_rounds, key="round")
+    cur, _ = loop.checkpoint(
+        edges.select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .repartition(num_parts, "u")
-        .localCheckpoint(eager=True)
+        .repartition(num_parts, "u"),
+        into="support",
+        probe=None,
     )
     # one full enumeration; support carried as maintained state from here
-    sup = (
+    sup, (n_cur, n_drop) = loop.checkpoint(
         cur.join(_support(cur), ["u", "v"], "left")
         .select(
             "u", "v", F.coalesce("support", F.lit(0)).alias("support")
         )
-        .repartition(num_parts, "u")
-        .localCheckpoint(eager=True)
+        .repartition(num_parts, "u"),
+        into="support",
+        probe=edges_and_drops,
     )
-    full_enums = 1
-    n_cur = sup.count()
-    metrics: list[dict] = [{"round": 0, "edges": n_cur}]
-    rounds = 0
-    converged = False
-    thresh = k - 2
-    while True:
-        drop = sup.filter(F.col("support") < thresh).select("u", "v")
-        n_drop = drop.count()
-        if n_drop == 0:
-            converged = True
-            break
-        if rounds >= max_rounds:
-            break
-        rounds += 1
-        cur = sup.select("u", "v")
-        tri_d = _dropped_triangles(cur, drop)
+    loop.record(edges=n_cur, done=n_drop == 0)
+    for _ in loop.rounds():
+        drop = sup.filter(drops).select("u", "v")
+        tri_d = _dropped_triangles(sup.select("u", "v"), drop)
         # decrements: each dropped triangle subtracts 1 from each of its
         # SURVIVING sides (sides that are themselves dropping carry no
         # support forward — the anti-join below removes them anyway)
@@ -157,9 +153,8 @@ def k_truss(
             )
         )
         dec = sides.groupBy("u", "v").agg(F.count("*").alias("lost"))
-        # eager localCheckpoint: materializes and truncates lineage so the
-        # next round plans from a flat LogicalRDD (see module docstring)
-        sup = (
+        dropped = n_drop
+        sup, (n_cur, n_drop) = loop.checkpoint(
             sup.join(drop, ["u", "v"], "left_anti")
             .join(dec, ["u", "v"], "left")
             .select(
@@ -169,15 +164,12 @@ def k_truss(
                     F.col("support") - F.coalesce("lost", F.lit(0))
                 ).alias("support"),
             )
-            .repartition(num_parts, "u")
-            .localCheckpoint(eager=True)
+            .repartition(num_parts, "u"),
+            into="support",
+            probe=edges_and_drops,
         )
-        n_nxt = sup.count()
-        metrics.append(
-            {"round": rounds, "edges": n_nxt, "dropped": n_drop}
-        )
-        n_cur = n_nxt
+        loop.record(edges=n_cur, dropped=dropped, done=n_drop == 0)
     # maintained support IS the within-subgraph support at the fixpoint
     # (induction: full enumeration at round 0, exact decrements since) —
     # no final recomputation needed; parity tests compare both.
-    return TrussResult(sup, rounds, converged, metrics, full_enums)
+    return TrussResult(sup, loop.steps, loop.converged, loop.metrics, 1)

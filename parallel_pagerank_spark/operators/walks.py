@@ -20,8 +20,8 @@ source; a walk ends early when it reaches a sink.
 Superstep shape: walk-state (walk_id, cur) joins edges shuffled on
 cur=src, then a groupBy(walk_id) min(struct(score, dst)) picks the hop
 with a map-side partial min — per step one edge-sized exchange plus one
-walk-sized aggregate, state eagerly localCheckpoint-truncated like every
-other superstep loop in this package (operators/bfs.py:12-18).
+walk-sized aggregate, each step's state checkpointed by the frontier
+driver of plans/iterate.py.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.iterate import Frontier
 from ..session import shuffle_partitions
 
 WALK_MODULUS = 1_000_003  # prime; selector values land in [0, M)
@@ -70,22 +71,18 @@ def deterministic_walks(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     e.count()
-    state = (
+    loop = Frontier(walk_length, key="step")
+    # no slot: ``rows`` unions every step's walk state
+    state, n_alive = loop.checkpoint(
         sources.select("id")
         .distinct()
         .select(F.col("id").alias("walk_id"), F.col("id").alias("vertex"))
         .repartition(num_parts, "walk_id")
-        .localCheckpoint(eager=True)
     )
     rows = state.withColumn("step", F.lit(0).cast("long"))
-    n_alive = state.count()
-    metrics: list[dict] = [{"step": 0, "alive": n_alive}]
-    steps = 0
-    for t in range(1, walk_length + 1):
-        if n_alive == 0:
-            break
-        steps = t
-        hop = (
+    loop.record(alive=n_alive, done=n_alive == 0)
+    for t in loop.rounds():
+        state, n_alive = loop.checkpoint(
             state.join(e, state.vertex == e.src)
             .select(
                 "walk_id",
@@ -98,16 +95,15 @@ def deterministic_walks(
             .agg(F.min("pick").alias("pick"))
             .select("walk_id", F.col("pick.d").alias("vertex"))
             .repartition(num_parts, "walk_id")
-            .localCheckpoint(eager=True)
         )
-        n_alive = hop.count()
         rows = rows.unionByName(
-            hop.withColumn("step", F.lit(t).cast("long"))
+            state.withColumn("step", F.lit(t).cast("long"))
         )
-        state = hop
-        metrics.append({"step": t, "alive": n_alive})
+        loop.record(alive=n_alive, done=n_alive == 0)
     e.unpersist()
-    return WalkResult(rows.select("walk_id", "step", "vertex"), steps, metrics)
+    return WalkResult(
+        rows.select("walk_id", "step", "vertex"), loop.steps, loop.metrics
+    )
 
 
 def walk_transitions(res: WalkResult) -> DataFrame:

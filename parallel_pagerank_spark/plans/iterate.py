@@ -1,4 +1,6 @@
-"""The superstep driver for iterative fixpoint loops over keyed state.
+"""The two loop drivers: ``SuperstepState`` for fixpoint loops over keyed
+state, ``Frontier`` for the loops whose state is a frontier, a shrinking
+set or a fixed-round iterate.
 
 Catalyst has no fixpoint operator (SURVEY.md §4.3), so PageRank's
 DataFrame tier, connected components and label propagation each need a
@@ -54,14 +56,48 @@ returns or raises): with AQE on, each fused action ran as 4 Spark jobs
 instead of 1. The operators persist the edge tables the loop reads inside
 the same scope: on a 20k-edge graph that took PageRank's from 6 jobs to 2
 and CC/LPA's from 5 to 1.
+
+Frontier loops
+--------------
+BFS, large-star/small-star, shortest paths, SCC (label races, peel,
+topological levels), k-core, k-truss, Katz, HITS, MIS, matching,
+colouring, walks and neighbourhood sketches keep a frontier, a shrinking
+set or a fixed-round iterate, often several frames a round, on
+``Frontier``. The operator keeps its step math and record keys; the
+driver owns each frame's eager ``localCheckpoint`` and the one action
+that reads it back (its row count, or the operator's ``probe``), the step
+counter and the stop rule (``max_iter`` rounds, or a record that says
+``done``: an empty frontier, no change), the metrics record with its
+``wall_ms``, and releasing every checkpoint a later one replaced. Most
+of these steps read the previous state two or more times (the
+plan-doubling hazard above), hence a checkpoint per frame.
+
+A frame put ``into`` a slot replaces the slot's frame, which is released
+at the end of the round (its replacement is materialized and the round's
+other reads of it are done), or at once outside a round; a frame a
+lazily persisted one (``cache``) replaces waits one more round, for the
+next round's action to compute its replacement. Never release a frame
+the result still reads: BFS's settled union, the walk rows, SSSP's
+distance chain and SCC's settled parts read every round's checkpoint, so
+those take no slot; MIS, matching and colouring release their winners
+and their last active set in ``consolidate``, once the union of the
+winners is checkpointed.
+
+Adaptive execution keeps the caller's setting: turning it off cut every
+frontier operator's jobs (BFS 66 to 28, SCC 238 to 78 on 1,500 vertices)
+but slowed k-truss, SSSP and large-star/small-star (2.8 to 4.2, 4.3 to
+5.5, 2.6 to 4.4 s, single runs); a per-operator scope waits for an
+interleaved A/B on a frontier workload.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Callable
+from operator import methodcaller
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..session import adaptive_off
 from .checkpoint import SuperstepCheckpointer
@@ -166,7 +202,101 @@ class SuperstepState:
                 {"partition": p, "rows": n} for p, n in sorted(counts)
             ]
             self.ckpt.save(iteration, metrics, partitions, converged=converged)
-        # ``DataFrame.unpersist`` does not reach a checkpoint's blocks:
-        # they belong to the RDD under its ``LogicalRDD``
-        prev._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        release_checkpoint(prev)
         return self.df
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop a local checkpoint's blocks, which ``DataFrame.unpersist``
+    does not reach: they belong to the RDD under its ``LogicalRDD``."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+class Frontier:
+    """The frontier-loop driver (module docstring)."""
+
+    def __init__(self, max_iter: int, key: str = "superstep"):
+        self.max_iter = max_iter
+        self.key = key  # the step's name in each metrics record
+        self.steps = 0
+        self.converged = False
+        self.metrics: list[dict] = []
+        self._slots: dict[str, DataFrame] = {}
+        self._pinned: list[DataFrame] = []
+        self._pending: list[tuple[DataFrame, int]] = []  # (frame, due round)
+        self._in_round = False
+        self._t0 = time.monotonic()
+
+    def checkpoint(
+        self,
+        df: DataFrame,
+        into: str | None = None,
+        probe: Callable[[DataFrame], Any] | None = methodcaller("count"),
+    ) -> tuple[DataFrame, Any]:
+        """Eager local checkpoint of ``df`` and ``probe`` of it (``None``:
+        no action). Without ``into`` it is released only by
+        ``consolidate``. Returns (checkpoint, probe result)."""
+        ckpt = df.localCheckpoint(eager=True)
+        value = probe(ckpt) if probe is not None else None
+        if into is None:
+            self._pinned.append(ckpt)
+        else:
+            self._hold(into, ckpt, self.steps)
+        return ckpt, value
+
+    def cache(self, df: DataFrame, into: str) -> DataFrame:
+        """Persist ``df`` lazily in slot ``into``."""
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._hold(into, df, self.steps + 1)
+        return df
+
+    def consolidate(self, df: DataFrame) -> DataFrame:
+        """Checkpoint ``df``, the loop's result and a union over its
+        slot-less checkpoints, and release every other frame it holds."""
+        pinned, self._pinned = self._pinned, []
+        out, _ = self.checkpoint(df, probe=None)
+        for frame in pinned:
+            release_checkpoint(frame)
+        self.close()
+        return out
+
+    def rounds(self) -> Iterator[int]:
+        """Yield 1, 2, ... until ``max_iter`` rounds have run or a record
+        said ``done``; release the frames due after each round."""
+        while self.steps < self.max_iter and not self.converged:
+            self.steps += 1
+            self._t0 = time.monotonic()
+            self._in_round = True
+            yield self.steps
+            self._in_round = False
+            self._flush(self.steps)
+
+    def record(self, done: bool = False, **fields) -> None:
+        """Append the round's record (round 0: the starting frames) with
+        its ``wall_ms``; ``done`` ends the loop converged."""
+        fields["wall_ms"] = (time.monotonic() - self._t0) * 1000.0
+        self.metrics.append({self.key: self.steps, **fields})
+        self.converged = done
+
+    def close(self) -> None:
+        """Release every frame the slots hold, once the caller has
+        materialized what read them."""
+        self._pending += [(f, self.steps) for f in self._slots.values()]
+        self._slots.clear()
+        self._flush(self.steps + 1)
+
+    def _hold(self, slot: str, df: DataFrame, due: int) -> None:
+        prev = self._slots.get(slot)
+        self._slots[slot] = df
+        if prev is not None:
+            self._pending.append((prev, due))
+            if not self._in_round:
+                self._flush(self.steps)
+
+    def _flush(self, step: int) -> None:
+        for frame, due in self._pending:
+            if due <= step and frame.is_cached:
+                frame.unpersist()
+            elif due <= step:
+                release_checkpoint(frame)
+        self._pending = [(f, d) for f, d in self._pending if d > step]

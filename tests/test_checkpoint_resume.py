@@ -199,6 +199,63 @@ def test_superstep_loops_leave_one_cached_state(spark, tmp_path):
         assert out.count() == rows.get(name, 12), name
 
 
+def _checkpoints_read(df) -> int:
+    """Cached RDDs under the ``LogicalRDD`` leaves of ``df``'s plan: the
+    local checkpoints the frame still reads."""
+    persistent = df.sparkSession.sparkContext._jsc.sc().getPersistentRDDs()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    ids = {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    }
+    return sum(bool(persistent.contains(i)) for i in ids)
+
+
+def test_frontier_loops_release_superseded_checkpoints(spark):
+    """A frontier-loop call (plans/iterate.py ``Frontier``) leaves cached
+    only the checkpoints its result still reads: every checkpoint a later
+    round replaced is released, and the MIS winners once their union is
+    consolidated. BFS keeps every round's frontier, because its result is
+    their union."""
+    from parallel_pagerank_spark.operators.bfs import bfs_distances
+    from parallel_pagerank_spark.operators.hits import hits
+    from parallel_pagerank_spark.operators.katz import katz_centrality
+    from parallel_pagerank_spark.operators.kcore import k_core
+    from parallel_pagerank_spark.operators.mis import (
+        maximal_independent_set,
+    )
+
+    # a graph no other test uses: the cache matches entries by plan
+    ring = edges_df(
+        spark,
+        [(i, (i + 1) % 23) for i in range(23)]
+        + [(i, (i + 2) % 23) for i in range(0, 23, 2)]
+        + [(23, 24)],
+    )
+    src = spark.createDataFrame([(0,)], "id long")
+    runs = {
+        "k_core": lambda: k_core(ring, k=2).core,
+        "bfs_distances": lambda: bfs_distances(
+            ring, src, max_hops=6, fast_path_edges=0
+        ).distances,
+        "hits": lambda: hits(ring, max_iter=4, fast_path_edges=0).scores,
+        "katz": lambda: katz_centrality(ring, max_iter=4).scores,
+        "maximal_independent_set": lambda: maximal_independent_set(
+            ring
+        ).members,
+    }
+
+    def cached():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    for name, run in runs.items():
+        before = cached()
+        out = run()
+        assert cached() - before <= _checkpoints_read(out), name
+        assert out.count() > 0, name
+
+
 _SCRATCH_CHILD = """
 import glob, os, tempfile
 from parallel_pagerank_spark import EngineConfig, get_spark

@@ -268,24 +268,6 @@ def test_components_never_materialize_neighborhood_arrays():
     assert "F.collect_set(" not in src and "F.collect_list(" not in src
 
 
-def test_superstep_loops_truncate_lineage():
-    """Plan-growth safety: hits/bfs/paths update loop state from
-    expressions that reference the PREVIOUS round's state twice (data +
-    total, or settled + anti-join), so an un-truncated logical plan
-    DOUBLES per round and driver-side Catalyst analysis goes exponential
-    (the hazard documented at plans/iterate.py; observed as a
-    multi-minute hang by iteration ~10 before the localCheckpoint fix).
-    This pins eager localCheckpoint truncation inside each loop body."""
-    import pathlib
-
-    ops = pathlib.Path(__file__).resolve().parent.parent / (
-        "parallel_pagerank_spark"
-    ) / "operators"
-    for mod in ("hits.py", "bfs.py", "paths.py"):
-        src = (ops / mod).read_text()
-        assert "localCheckpoint(eager=True)" in src, mod
-
-
 def test_jaccard_join_candidates_are_prefix_filtered(spark):
     """Hot-shingle safety: the exact similarity join must generate
     candidates from PREFIX tokens (df-ranked rarest shingles per set),
@@ -366,21 +348,76 @@ def test_decontam_gram_join_is_equi_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_mis_and_topo_truncate_lineage():
-    """Same plan-growth safety as hits/bfs/paths for the round-10/8
-    iterative operators (active set / level table referenced twice per
-    round)."""
-    import pathlib
+def _analyzed_joins(df) -> int:
+    """Join nodes in the analyzed plan (lineage up to the checkpoints)."""
+    tree = df._jdf.queryExecution().analyzed().treeString()
+    return sum(
+        line.lstrip(" :+-").startswith("Join ") for line in tree.splitlines()
+    )
 
-    ops = pathlib.Path(__file__).resolve().parent.parent / (
-        "parallel_pagerank_spark"
-    ) / "operators"
-    for mod in ("mis.py",):
-        src = (ops / mod).read_text()
-        assert "localCheckpoint(eager=True)" in src, mod
-    scc_src = (ops / "scc.py").read_text()
-    topo = scc_src[scc_src.index("def topological_levels") :]
-    assert "localCheckpoint(eager=True)" in topo
+
+def test_frontier_loops_keep_flat_plans(spark, monkeypatch):
+    """Plan-growth safety of the frontier driver (plans/iterate.py): the
+    HITS, BFS, shortest-path, MIS and topological-level steps read the
+    previous round's state two or more times (data + L1 total, frontier +
+    settled anti-join, candidate + distance join, active set + retired
+    neighbours, level table + merge), so without the driver's per-round
+    checkpoint each round's plan would double. The analyzed plan of every
+    frame the driver checkpoints in each round after the second has as
+    many joins as the same frame in round 2. BFS's settled union adds one
+    leaf per round but no join; the shortest-path distance table grows a
+    join per round and is re-cut every 8 rounds, so its round 10 is
+    compared, the last it runs."""
+    from parallel_pagerank_spark.operators.bfs import bfs_distances
+    from parallel_pagerank_spark.operators.hits import hits
+    from parallel_pagerank_spark.operators.mis import (
+        maximal_independent_set,
+    )
+    from parallel_pagerank_spark.operators.paths import sssp_distances
+    from parallel_pagerank_spark.operators.scc import topological_levels
+    from parallel_pagerank_spark.plans.iterate import Frontier
+
+    rounds: dict[int, list[int]] = {}
+    real_checkpoint = Frontier.checkpoint
+    # rounds between equal plans: the distance table's re-cut period
+    period = {"sssp": 8}
+
+    def sizing_checkpoint(self, df, *args, **kw):
+        if self._in_round:
+            sizes = rounds.setdefault(self.steps, [])
+            sizes.append(_analyzed_joins(df))
+            # checked as it is built: a doubling plan soon outgrows memory
+            if self.steps > 2 and (self.steps - 2) % period.get(name, 1) == 0:
+                assert sizes == rounds[2][: len(sizes)], (name, rounds)
+        return real_checkpoint(self, df, *args, **kw)
+
+    monkeypatch.setattr(Frontier, "checkpoint", sizing_checkpoint)
+    path = edges_df(spark, [(i, i + 1) for i in range(14)])
+    src = spark.createDataFrame([(0,)], "id long")
+    ring = edges_df(spark, [(i, (i + 1) % 40) for i in range(40)])
+    # 8 x 8 grid: MIS takes 4 rounds
+    grid = edges_df(
+        spark,
+        [(r * 8 + c, r * 8 + c + 1) for r in range(8) for c in range(7)]
+        + [(r * 8 + c, r * 8 + c + 8) for r in range(7) for c in range(8)],
+    )
+    runs = {
+        "hits": lambda: hits(ring, max_iter=10, fast_path_edges=0),
+        "bfs": lambda: bfs_distances(
+            path, src, max_hops=10, fast_path_edges=0
+        ),
+        "sssp": lambda: sssp_distances(
+            path, src, max_rounds=10, fast_path_edges=0
+        ),
+        "mis": lambda: maximal_independent_set(grid),
+        "topo": lambda: topological_levels(path, "src", "dst", max_iter=10),
+    }
+    for name, run in runs.items():
+        rounds.clear()
+        run()
+        last = max(rounds)
+        assert last >= (3 if name == "mis" else 10), (name, rounds)
+        assert rounds[last] == rounds[2], (name, rounds)
 
 
 def test_k_truss_single_full_enumeration(spark, monkeypatch):
@@ -630,19 +667,117 @@ def test_triangle_count_reuses_exchanges(spark):
         edges.unpersist()
 
 
+def test_frontier_loop_jobs_per_call(spark):
+    """Spark jobs of one call of each frontier-loop operator
+    (plans/iterate.py ``Frontier``) on a fixed 36-vertex graph, the
+    DataFrame tier forced. Each bound is the count the hand-written loop
+    the driver replaced ran; k-truss now runs 5 (7 before): one action
+    counts its edges and next drops. The calls plan without adaptive
+    execution: under it the counts wander between runs of the same code
+    (colouring read 82-86), as it re-plans around the order in which
+    stages finish.
+    """
+    from parallel_pagerank_spark.operators import (
+        bfs,
+        coloring,
+        components,
+        hits,
+        katz,
+        kcore,
+        matching,
+        mis,
+        neighborhood,
+        paths,
+        scc,
+        truss,
+        walks,
+    )
+    from parallel_pagerank_spark.session import adaptive_off
+
+    sc = spark.sparkContext
+    pairs = (
+        [(i, (i * 7 + 3) % 30) for i in range(30)]
+        + [(i, (i + 1) % 30) for i in range(0, 30, 3)]
+        + [(i, i + 30) for i in range(0, 30, 5)]
+    )
+    edges = edges_df(spark, pairs)
+    # ids past the vectorized route's bound: pseudo_diameter has no opt-out
+    far = 60_000_001
+    sparse = edges_df(spark, [(a * far, b * far) for a, b in pairs])
+    src = spark.createDataFrame([(0,), (5,)], "id long")
+    dag = edges_df(
+        spark, [(0, 1), (1, 2), (2, 3), (0, 4), (4, 3), (3, 5), (5, 6), (1, 6)]
+    )
+    # two cycles and a tail: SCC peels each race to a fixpoint
+    cycles = edges_df(
+        spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 3), (4, 5)]
+    )
+    weighted = edges.withColumn("w", (F.col("src") % 3 + 1).cast("double"))
+    calls = {
+        "bfs_distances": (21, lambda: bfs.bfs_distances(
+            edges, src, max_hops=6, fast_path_edges=0)),
+        "landmark_distances": (15, lambda: bfs.landmark_distances(
+            edges, src, max_hops=4)),
+        "pseudo_diameter": (28, lambda: bfs.pseudo_diameter(
+            sparse, max_hops=4)),
+        "large_star_small_star": (13, lambda: (
+            components.large_star_small_star(edges, fast_path_edges=0))),
+        "sssp_distances": (21, lambda: paths.sssp_distances(
+            weighted, src, weight_col="w", max_rounds=6,
+            fast_path_edges=0)),
+        "strongly_connected_components": (56, lambda: (
+            scc.strongly_connected_components(cycles, fast_path_edges=0))),
+        "topological_levels": (23, lambda: scc.topological_levels(
+            dag, "src", "dst")),
+        "k_core": (6, lambda: kcore.k_core(edges, k=2)),
+        "k_truss": (5, lambda: truss.k_truss(edges, k=3)),
+        "katz_centrality": (14, lambda: katz.katz_centrality(
+            edges, max_iter=5)),
+        "hits": (27, lambda: hits.hits(
+            edges, max_iter=4, fast_path_edges=0)),
+        "maximal_independent_set": (11, lambda: (
+            mis.maximal_independent_set(edges))),
+        "maximal_matching": (19, lambda: matching.maximal_matching(edges)),
+        "greedy_coloring": (41, lambda: coloring.greedy_coloring(edges)),
+        "deterministic_walks": (15, lambda: walks.deterministic_walks(
+            edges, src, walk_length=4)),
+        "neighborhood_sketches": (16, lambda: (
+            neighborhood.neighborhood_sketches(
+                edges, max_rounds=4, num_registers=4))),
+    }
+    tracker = sc.statusTracker()
+    for name, (most, call) in calls.items():
+        group = f"frontier-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, name)
+        try:
+            with adaptive_off(spark):
+                call()
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs = len(tracker.getJobIdsForGroup(group))
+        assert jobs <= most, (name, jobs)
+
+
 def test_vectorized_tiers_hand_back_arrow_batches(spark, monkeypatch):
-    """The vectorized PageRank, CC and LPA tiers hand their numpy results
-    back as an RDD of Arrow batches (``session.frame_from_pandas``), not a
+    """The vectorized PageRank, CC, LPA, HITS (both returns), BFS,
+    shortest-path and SCC tiers hand their numpy results back as an RDD
+    of Arrow batches (``session.frame_from_pandas``), not a
     ``LocalRelation`` the driver decoded row by row, and their route
     aggregate runs as one job with AQE off. The session's local-relation
     threshold and AQE setting read the same afterwards, also when
     ``createDataFrame`` raises."""
+    from parallel_pagerank_spark.operators.bfs import bfs_distances
     from parallel_pagerank_spark.operators.components import (
         _route_fast,
         connected_components,
     )
+    from parallel_pagerank_spark.operators.hits import _hits_fast, hits
     from parallel_pagerank_spark.operators.labelprop import label_propagation
     from parallel_pagerank_spark.operators.pagerank import pagerank
+    from parallel_pagerank_spark.operators.paths import sssp_distances
+    from parallel_pagerank_spark.operators.scc import (
+        strongly_connected_components,
+    )
     from parallel_pagerank_spark.session import frame_from_pandas
 
     threshold = "spark.sql.execution.arrow.localRelationThreshold"
@@ -657,10 +792,17 @@ def test_vectorized_tiers_hand_back_arrow_batches(spark, monkeypatch):
     finally:
         sc._jsc.clearJobGroup()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    src = spark.createDataFrame([(0,)], "id long")
+    no_edges = spark.createDataFrame([], "src long, dst long")
     for res, frame in (
         (pagerank(df), "ranks"),
         (connected_components(df), "components"),
         (label_propagation(df, max_iter=10), "labels"),
+        (hits(df), "scores"),
+        (_hits_fast(no_edges, 3, 2), "scores"),
+        (bfs_distances(df, src), "distances"),
+        (sssp_distances(df, src), "distances"),
+        (strongly_connected_components(df), "components"),
     ):
         assert res.mode == "vectorized", frame
         plan = getattr(res, frame)._jdf.queryExecution().optimizedPlan()

@@ -356,7 +356,7 @@ def _analyzed_joins(df) -> int:
     )
 
 
-def test_frontier_loops_keep_flat_plans(spark, monkeypatch):
+def _assert_frontier_plans_stay_flat(spark, monkeypatch, names):
     """Plan-growth safety of the frontier driver (plans/iterate.py): the
     HITS, BFS, shortest-path, MIS and topological-level steps read the
     previous round's state two or more times (data + L1 total, frontier +
@@ -412,12 +412,25 @@ def test_frontier_loops_keep_flat_plans(spark, monkeypatch):
         "mis": lambda: maximal_independent_set(grid),
         "topo": lambda: topological_levels(path, "src", "dst", max_iter=10),
     }
-    for name, run in runs.items():
+    for name in names:
+        run = runs[name]
         rounds.clear()
         run()
         last = max(rounds)
         assert last >= (3 if name == "mis" else 10), (name, rounds)
         assert rounds[last] == rounds[2], (name, rounds)
+
+
+def test_superstep_loops_truncate_lineage(spark, monkeypatch):
+    """HITS, BFS and shortest paths keep a flat plan per round."""
+    _assert_frontier_plans_stay_flat(
+        spark, monkeypatch, ("hits", "bfs", "sssp")
+    )
+
+
+def test_mis_and_topo_truncate_lineage(spark, monkeypatch):
+    """MIS and topological levels keep a flat plan per round."""
+    _assert_frontier_plans_stay_flat(spark, monkeypatch, ("mis", "topo"))
 
 
 def test_k_truss_single_full_enumeration(spark, monkeypatch):
